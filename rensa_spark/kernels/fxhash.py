@@ -9,11 +9,16 @@ Reference: /root/reference/src/utils.rs
   band of u32 MinHash slots, packed two-at-a-time into u64s, finished with
   ``rotl(state, 26)``.
 
-Vectorization strategy (no per-token Python in the hot path): tokens are
-grouped by byte length; for each distinct length the whole group is hashed as
-one (group, length) uint8 matrix with numpy uint64 arithmetic. The 128-bit
-product inside ``multiply_mix`` is decomposed into 32-bit limbs. The loop
-count per group is ceil(length/16), i.e. O(max_token_len), not O(n_tokens).
+Vectorization strategy (no per-token Python in the hot path): every token is
+a (start, length) range of one uint8 buffer (``fxhash64`` joins byte tokens
+into one). Tokens are grouped by length class, since ``hash_bytes`` reads
+fixed word positions per class (0-3, 4-7, 8-16, then 16-byte folding steps),
+and each class is hashed at once with numpy uint64 arithmetic. A word read is
+one fancy index into an unaligned little-endian u64 view of the zero-padded
+buffer (``_u64_view``: byte stride 1, so ``view[p]`` is bytes ``[p, p+8)``);
+a u32 read is the same load masked to its low 4 bytes. The 128-bit product
+inside ``multiply_mix`` is decomposed into 32-bit limbs. The numpy call count
+is O(max_token_len / 16), not O(n_tokens).
 """
 
 from __future__ import annotations
@@ -30,9 +35,6 @@ ROTATE = 26  # utils.rs:11
 SEED1 = 0x243F6A8885A308D3  # utils.rs:15
 SEED2 = 0x13198A2E03707344  # utils.rs:16
 PREVENT_TRIVIAL_ZERO_COLLAPSE = 0xA4093822299F31D0  # utils.rs:17
-
-_POW8 = (np.uint64(256) ** np.arange(8, dtype=U64)).astype(U64)
-_POW4 = (np.uint64(256) ** np.arange(4, dtype=U64)).astype(U64)
 
 
 def _mul_hi_lo(x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -55,48 +57,6 @@ def _multiply_mix(x: np.ndarray, y: np.ndarray) -> np.ndarray:
     return hi ^ lo
 
 
-def _read_u64_le(m: np.ndarray, off: int) -> np.ndarray:
-    """LE u64 from columns [off, off+8) of a (k, L) uint8 matrix."""
-    return (m[:, off : off + 8].astype(U64) * _POW8).sum(axis=1, dtype=U64)
-
-
-def _read_u32_le(m: np.ndarray, off: int) -> np.ndarray:
-    return (m[:, off : off + 4].astype(U64) * _POW4).sum(axis=1, dtype=U64)
-
-
-def _hash_bytes_fixed_len(m: np.ndarray) -> np.ndarray:
-    """hash_bytes (utils.rs:129-165) vectorized over a (k, L) uint8 matrix."""
-    k, length = m.shape
-    s0 = np.full(k, SEED1, dtype=U64)
-    s1 = np.full(k, SEED2, dtype=U64)
-    if length <= 16:
-        if length >= 8:
-            s0 ^= _read_u64_le(m, 0)
-            s1 ^= _read_u64_le(m, length - 8)
-        elif length >= 4:
-            s0 ^= _read_u32_le(m, 0)
-            s1 ^= _read_u32_le(m, length - 4)
-        elif length > 0:
-            lo = m[:, 0].astype(U64)
-            mid = m[:, length // 2].astype(U64)
-            hi = m[:, length - 1].astype(U64)
-            s0 ^= lo
-            s1 ^= (hi << U64(8)) | mid
-    else:
-        ptzc = U64(PREVENT_TRIVIAL_ZERO_COLLAPSE)
-        off = 0
-        while off < length - 16:
-            x = _read_u64_le(m, off)
-            y = _read_u64_le(m, off + 8)
-            t = _multiply_mix(s0 ^ x, ptzc ^ y)
-            s0 = s1
-            s1 = t
-            off += 16
-        s0 = s0 ^ _read_u64_le(m, length - 16)
-        s1 = s1 ^ _read_u64_le(m, length - 8)
-    return _multiply_mix(s0, s1) ^ U64(length)
-
-
 def _finalize(compressed: np.ndarray) -> np.ndarray:
     """calculate_hash_fast finalizer: rotl(compressed * K, 26) (utils.rs:168-178)."""
     with np.errstate(over="ignore"):
@@ -104,22 +64,28 @@ def _finalize(compressed: np.ndarray) -> np.ndarray:
     return (h << U64(ROTATE)) | (h >> U64(64 - ROTATE))
 
 
-def _gather_u64(buf: np.ndarray, pos: np.ndarray) -> np.ndarray:
-    """LE u64 at arbitrary byte offsets ``pos`` of a uint8 buffer."""
-    idx = pos[:, None] + np.arange(8, dtype=np.int64)[None, :]
-    return (buf[idx].astype(U64) * _POW8).sum(axis=1, dtype=U64)
+# hash of the empty byte string: hash_bytes(b"") = multiply_mix(SEED1, SEED2)
+_EMPTY_HASH = _finalize(
+    _multiply_mix(np.array([SEED1], dtype=U64), np.array([SEED2], dtype=U64))
+)[0]
 
 
-def _gather_u32(buf: np.ndarray, pos: np.ndarray) -> np.ndarray:
-    idx = pos[:, None] + np.arange(4, dtype=np.int64)[None, :]
-    return (buf[idx].astype(U64) * _POW4).sum(axis=1, dtype=U64)
+def _u64_view(buf: np.ndarray) -> np.ndarray:
+    """Unaligned little-endian u64 at every byte offset: ``view[p]`` is the
+    u64 in bytes ``[p, p+8)``. Eight zero bytes are appended first, so a
+    4-byte read through the view (``& 0xFFFFFFFF``) at the last 4 bytes of
+    the buffer still has 8 readable bytes; the pad never reaches a result
+    bit because only the low 4 bytes of such a read are kept."""
+    padded = np.zeros(len(buf) + 8, dtype=U8)
+    padded[: len(buf)] = buf
+    return np.ndarray((len(buf) + 1,), dtype="<u8", buffer=padded, strides=(1,))
 
 
 def fxhash64_ranges(buf: np.ndarray, starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
     """calculate_hash_fast over (start, length) slices of one uint8 buffer.
 
-    Zero-copy hot path: shingle bytes are never materialized as Python
-    objects. Vectorized by LENGTH CLASS, not exact length — hash_bytes only
+    Shingle bytes are never materialized as Python objects; the buffer is
+    copied once, into the padded u64 view (``_u64_view``). Vectorized by LENGTH CLASS, not exact length — hash_bytes only
     reads fixed word positions per class (utils.rs:134-147), so e.g. every
     8..16-byte token needs exactly the u64s at offsets 0 and len-8; one
     gather handles the whole class regardless of exact lengths. Long tokens
@@ -132,12 +98,10 @@ def fxhash64_ranges(buf: np.ndarray, starts: np.ndarray, lengths: np.ndarray) ->
     starts = np.asarray(starts, dtype=np.int64)
     lengths = np.asarray(lengths, dtype=np.int64)
     len64 = lengths.astype(U64)
+    view = _u64_view(buf)
+    m32 = U64(0xFFFFFFFF)
 
-    sel0 = lengths == 0
-    if sel0.any():
-        out[sel0] = _finalize(
-            _multiply_mix(np.array([SEED1], dtype=U64), np.array([SEED2], dtype=U64))
-        )[0]
+    out[lengths == 0] = _EMPTY_HASH
 
     sel = (lengths >= 1) & (lengths <= 3)
     if sel.any():
@@ -151,15 +115,15 @@ def fxhash64_ranges(buf: np.ndarray, starts: np.ndarray, lengths: np.ndarray) ->
     sel = (lengths >= 4) & (lengths <= 7)
     if sel.any():
         s, l = starts[sel], lengths[sel]
-        s0 = U64(SEED1) ^ _gather_u32(buf, s)
-        s1 = U64(SEED2) ^ _gather_u32(buf, s + l - 4)
+        s0 = U64(SEED1) ^ (view[s] & m32)
+        s1 = U64(SEED2) ^ (view[s + l - 4] & m32)
         out[sel] = _finalize(_multiply_mix(s0, s1) ^ len64[sel])
 
     sel = (lengths >= 8) & (lengths <= 16)
     if sel.any():
         s, l = starts[sel], lengths[sel]
-        s0 = U64(SEED1) ^ _gather_u64(buf, s)
-        s1 = U64(SEED2) ^ _gather_u64(buf, s + l - 8)
+        s0 = U64(SEED1) ^ view[s]
+        s1 = U64(SEED2) ^ view[s + l - 8]
         out[sel] = _finalize(_multiply_mix(s0, s1) ^ len64[sel])
 
     long_sel = lengths > 16
@@ -175,13 +139,11 @@ def fxhash64_ranges(buf: np.ndarray, starts: np.ndarray, lengths: np.ndarray) ->
             s1 = np.full(len(sub), SEED2, dtype=U64)
             for k in range(int(it)):
                 off = 16 * k
-                x = _gather_u64(buf, s + off)
-                y = _gather_u64(buf, s + off + 8)
-                t = _multiply_mix(s0 ^ x, ptzc ^ y)
+                t = _multiply_mix(s0 ^ view[s + off], ptzc ^ view[s + off + 8])
                 s0 = s1
                 s1 = t
-            s0 = s0 ^ _gather_u64(buf, s + l - 16)
-            s1 = s1 ^ _gather_u64(buf, s + l - 8)
+            s0 = s0 ^ view[s + l - 16]
+            s1 = s1 ^ view[s + l - 8]
             out[sub] = _finalize(_multiply_mix(s0, s1) ^ len64[sub])
     return out
 
@@ -189,37 +151,10 @@ def fxhash64_ranges(buf: np.ndarray, starts: np.ndarray, lengths: np.ndarray) ->
 def fxhash64(tokens: Sequence[bytes]) -> np.ndarray:
     """calculate_hash_fast over a batch of byte strings -> uint64[n].
 
-    Tokens are length-bucketed; each bucket is hashed fully vectorized.
-    """
-    n = len(tokens)
-    out = np.empty(n, dtype=U64)
-    if n == 0:
-        return out
-    lengths = np.fromiter((len(t) for t in tokens), dtype=np.int64, count=n)
-    total = int(lengths.sum())
-    if total == 0:
-        # len==0: hash_bytes = multiply_mix(SEED1, SEED2) ^ 0
-        empty = _finalize(
-            _multiply_mix(np.array([SEED1], dtype=U64), np.array([SEED2], dtype=U64))
-        )[0]
-        out.fill(empty)
-        return out
-    blob = b"".join(tokens)
-    buf = np.frombuffer(blob, dtype=U8)
-    ends = np.cumsum(lengths)
-    starts = ends - lengths
-    for length in np.unique(lengths):
-        sel = np.nonzero(lengths == length)[0]
-        if length == 0:
-            empty = _finalize(
-                _multiply_mix(np.array([SEED1], dtype=U64), np.array([SEED2], dtype=U64))
-            )[0]
-            out[sel] = empty
-            continue
-        idx = starts[sel][:, None] + np.arange(length, dtype=np.int64)[None, :]
-        m = buf[idx]
-        out[sel] = _finalize(_hash_bytes_fixed_len(m))
-    return out
+    The tokens are joined into one buffer and hashed as ranges of it."""
+    lengths = np.fromiter((len(t) for t in tokens), dtype=np.int64, count=len(tokens))
+    buf = np.frombuffer(b"".join(tokens), dtype=U8)
+    return fxhash64_ranges(buf, np.cumsum(lengths) - lengths, lengths)
 
 
 def fxhash64_strs(tokens: Iterable[str]) -> np.ndarray:

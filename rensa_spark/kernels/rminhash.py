@@ -15,32 +15,42 @@ import numpy as np
 
 U32 = np.uint32
 U64 = np.uint64
-U32_MAX = np.uint32(0xFFFFFFFF)
+U64_MAX = np.uint64(0xFFFFFFFFFFFFFFFF)
 
-# cap the (tokens x num_perm) intermediate per slab. 2^16 elems = 512 KiB
-# of u64 (512 tokens at num_perm=128): re-measured in round 2 on clean
-# best-of-3 sweeps over BOTH short-caption and long-document corpora —
-# 2^16-2^17 ties for fastest, 2^18 is ~1.4x slower (the permuted slab falls
-# out of L2), 2^20+ is ~2.8x slower. Output is slab-size-invariant
-# (tests/test_kernels chunking invariance).
+# (num_perm x tokens) elements per slab block: 2^16 = 512 tokens at
+# num_perm=128, i.e. three 512 KiB u64 blocks (values, tiled mul, tiled add).
+# Swept 2^14-2^18 on a 4-core Xeon (8 MiB L2/core), min of 11 interleaved
+# rounds, R-/C-MinHash ms: 20k dedupbench captions (1.19M tokens)
+# 325/312, 351/245, 278/198, 320/188, 334/257; 500 long docs of 500-5000
+# tokens (1.36M) 379/266, 316/223, 277/161, 295/181, 389/245. 2^16 is fastest
+# or tied on both. Output is slab-size-invariant (tests/test_kernels
+# chunking invariance).
 _SLAB_ELEMS = 1 << 16
 
 
-def rminhash_matrix(
-    flat_hashes: np.ndarray, offsets: np.ndarray, a: np.ndarray, b: np.ndarray
+def segmented_min(
+    tokens: np.ndarray, offsets: np.ndarray, add: np.ndarray, mul: np.ndarray | None = None
 ) -> np.ndarray:
-    """(rows, num_perm) uint32 digest matrix from flat token hashes + offsets.
+    """(rows, num_perm) uint64: per row and permutation p, the minimum over
+    the row's tokens t of ``mul[p] * t + add[p]`` (wrapping u64; no ``mul``
+    means 1). Rows without tokens stay u64::MAX.
 
     offsets has rows+1 entries, starts at 0, non-decreasing, ends at
-    len(flat_hashes) — same contract as the reference flat path
+    len(tokens) — same contract as the reference flat path
     (src/rminhash/py.rs:291-316).
-    """
+
+    The token stream is cut into fixed-width slabs laid out perm-major: a
+    slab is a contiguous (num_perm, width) block, the multiply and add run
+    same-shape against ``mul``/``add`` tiled once per call (a broadcast u64
+    multiply or add runs ~1.5-2x slower, and one on a strided sub-view of a
+    wider block ~2.5x), and the per-row min is a reduceat along the
+    contiguous last axis (~1.5-2.7x faster than along axis 0). A row cut by
+    a slab edge is min-merged with what the earlier slabs left for it."""
     offsets = np.asarray(offsets, dtype=np.int64)
-    flat = np.ascontiguousarray(flat_hashes, dtype=U64)
-    rows = len(offsets) - 1
-    num_perm = len(a)
-    out = np.full((rows, num_perm), U32_MAX, dtype=U32)
-    n = len(flat)
+    tokens = np.ascontiguousarray(tokens, dtype=U64)
+    rows, num_perm = len(offsets) - 1, len(add)
+    out = np.full((rows, num_perm), U64_MAX, dtype=U64)
+    n = len(tokens)
     if rows == 0 or n == 0:
         return out
     if offsets[0] != 0 or offsets[-1] != n or np.any(np.diff(offsets) < 0):
@@ -48,49 +58,44 @@ def rminhash_matrix(
             "row_offsets must start at 0, be non-decreasing, and end at token_hashes length"
         )
 
-    # process row-ranges so the permuted slab stays in cache-friendly memory
-    rows_per_slab_tokens = max(_SLAB_ELEMS // max(num_perm, 1), 1)
-    row_start = 0
-    while row_start < rows:
-        row_end = row_start + 1
-        while (
-            row_end < rows
-            and offsets[row_end + 1] - offsets[row_start] <= rows_per_slab_tokens
-        ):
-            row_end += 1
-        t0, t1 = int(offsets[row_start]), int(offsets[row_end])
-        if t1 > t0:
-            h = flat[t0:t1]
-            # distinct-token pre-map (the reference's adaptive permutation
-            # cache, src/rminhash/permutation_cache.rs, as a slab-local
-            # exact rewrite): when tokens repeat, permute each distinct hash
-            # once and gather — identical output, multiply count drops from
-            # n to u
-            uniq, inverse = np.unique(h, return_inverse=True)
-            use_premap = len(uniq) <= 0.7 * len(h)
-            hh = uniq if use_premap else h
-            with np.errstate(over="ignore"):
-                # (a*h + b) with in-place ops; the >>32 and u32 cast happen
-                # AFTER the segmented min — x >> 32 is monotonic
-                # non-decreasing, so min(x) >> 32 == min(x >> 32). This
-                # halves memory traffic over the big slab.
-                permuted = np.multiply(a[None, :], hh[:, None])
-                np.add(permuted, b[None, :], out=permuted)
-            if use_premap:
-                permuted = permuted[inverse]
-            seg = offsets[row_start : row_end + 1] - t0
-            starts = seg[:-1]
-            valid = seg[1:] > starts  # rows with >=1 token
-            # reduceat over NON-EMPTY rows only: empty rows occupy no token
-            # positions, so consecutive valid starts delimit segments exactly
-            # (clamping empty-row starts instead would corrupt the previous
-            # row's segment when a slab ends with empty rows)
-            mins = np.minimum.reduceat(permuted, starts[valid], axis=0)
-            mins = (mins >> U64(32)).astype(U32)
-            slab = out[row_start:row_end]
-            slab[valid] = mins
-        row_start = row_end
+    width = min(max(_SLAB_ELEMS // max(num_perm, 1), 1), n)
+    block = np.empty(num_perm * width, dtype=U64)
+    add_t = np.repeat(np.asarray(add, dtype=U64)[:, None], width, axis=1)
+    if mul is not None:
+        mul_t = np.repeat(np.asarray(mul, dtype=U64)[:, None], width, axis=1)
+    # non-empty rows tile [0, n) in order; slab [c0, c1) covers the rows
+    # nonempty[first[i]:last[i]], the first of which may start before c0
+    nonempty = np.flatnonzero(offsets[1:] > offsets[:-1])
+    row_starts = offsets[nonempty]
+    c0s = np.arange(0, n, width)
+    first = np.searchsorted(row_starts, c0s, side="right") - 1
+    last = np.searchsorted(row_starts, c0s + width, side="left")
+    for c0, i0, i1 in zip(c0s.tolist(), first.tolist(), last.tolist()):
+        w = min(width, n - c0)
+        blk = block[: num_perm * w].reshape(num_perm, w)
+        blk[...] = tokens[None, c0 : c0 + w]
+        if mul is not None:
+            np.multiply(blk, mul_t[:, :w], out=blk)
+        np.add(blk, add_t[:, :w], out=blk)
+        seg = row_starts[i0:i1] - c0
+        seg[0] = 0
+        mins = np.minimum.reduceat(blk, seg, axis=1).T
+        if row_starts[i0] < c0:
+            np.minimum(mins[0], out[nonempty[i0]], out=mins[0])
+        out[nonempty[i0:i1]] = mins
     return out
+
+
+def rminhash_matrix(
+    flat_hashes: np.ndarray, offsets: np.ndarray, a: np.ndarray, b: np.ndarray
+) -> np.ndarray:
+    """(rows, num_perm) uint32 digest matrix from flat token hashes + offsets
+    (contract as in segmented_min).
+
+    The >>32 happens AFTER the segmented min: x >> 32 is monotonic
+    non-decreasing, so min(x) >> 32 == min(x >> 32); u64::MAX >> 32 is the
+    empty-row u32::MAX."""
+    return (segmented_min(flat_hashes, offsets, b, mul=a) >> U64(32)).astype(U32)
 
 
 def jaccard_matrix(sig_a: np.ndarray, sig_b: np.ndarray) -> np.ndarray:

@@ -105,33 +105,59 @@ def test_rminhash_matrix_matches_oracle():
         assert got[i].tolist() == want, f"row {i}"
 
 
+def test_fxhash_ranges_ending_at_buffer_end_match_oracle():
+    """The u64 view reads 8 bytes at every gather; a token of 4-7 bytes
+    that ends on the buffer's last byte reads its second u32 partly from
+    the zero pad. Every length class is pinned with the token at the end."""
+    rng = random.Random(43)
+    for length in [4, 5, 6, 7, 8, 9, 15, 16, 17, 24, 31, 32, 33, 48]:
+        for prefix in [0, 1, 7]:
+            blob = _rand_bytes(rng, prefix + length)
+            buf = np.frombuffer(blob, dtype=np.uint8)
+            got = kf.fxhash64_ranges(buf, np.array([prefix]), np.array([length]))
+            assert got.tolist() == [oracle.fxhash64_py(blob[prefix:])], (length, prefix)
+
+
+def _repeated_docs(rng: random.Random, n_docs: int) -> list[list[int]]:
+    """Rows drawing with repetition from a 5-hash pool (shared across rows)."""
+    pool = [rng.getrandbits(64) for _ in range(5)]
+    lengths = [rng.choice([0, 1, 3, 40, 150]) for _ in range(n_docs)]
+    return [[rng.choice(pool) for _ in range(n)] for n in lengths]
+
+
 def test_rminhash_matrix_chunking_invariance():
     """Slab boundaries must not change results (reference analogue:
-    chunked pipeline == scalar, pipeline.rs:370-623). Interleaves empty rows
-    everywhere so that slabs end in empty rows for some slab size (regression:
-    trailing-empty-row slab corruption of the previous row's segment)."""
+    chunked pipeline == scalar, pipeline.rs:370-623), for R-MinHash and
+    C-MinHash, which share the slab loop, on random and repeated tokens.
+    Interleaves empty rows everywhere so that slabs start and end next to
+    empty rows for some slab size, and rows longer than a slab are cut by
+    slab edges."""
     rng = random.Random(13)
-    base = _random_docs(rng, 30)
-    docs = []
-    for d in base:
-        docs.append(d)
-        docs.append([])  # empty after every doc
-    docs.append([])
     a, b = rminhash_permutations(128, 42)
-    flat, offsets = _flat(docs)
-    want = [
-        oracle.rminhash_sig_py(d, [int(x) for x in a], [int(x) for x in b])
-        for d in docs
-    ]
-    old = km._SLAB_ELEMS
-    try:
-        for slab in [256, 1024, 4096, 1 << 20]:
-            km._SLAB_ELEMS = slab
-            got = km.rminhash_matrix(flat, offsets, a, b)
-            for i in range(len(docs)):
-                assert got[i].tolist() == want[i], f"slab={slab} row={i}"
-    finally:
-        km._SLAB_ELEMS = old
+    sa, sb, pc, pd = cminhash_params(42)
+    for docs_of in (_random_docs, _repeated_docs):
+        docs = []
+        for d in docs_of(rng, 30):
+            docs.append(d)
+            docs.append([])  # empty after every doc
+        docs.append([])
+        flat, offsets = _flat(docs)
+        want = [
+            oracle.rminhash_sig_py(d, [int(x) for x in a], [int(x) for x in b])
+            for d in docs
+        ]
+        want64 = [oracle.cminhash_sig64_py(d, sa, sb, pc, pd, 128) for d in docs]
+        old = km._SLAB_ELEMS
+        try:
+            for slab in [256, 1024, 4096, 1 << 20]:
+                km._SLAB_ELEMS = slab
+                got = km.rminhash_matrix(flat, offsets, a, b)
+                got64 = kc.cminhash_matrix64(flat, offsets, 128, 42)
+                for i in range(len(docs)):
+                    assert got[i].tolist() == want[i], f"slab={slab} row={i}"
+                    assert got64[i].tolist() == want64[i], f"cminhash slab={slab} row={i}"
+        finally:
+            km._SLAB_ELEMS = old
 
 
 def test_rminhash_empty_doc_is_all_max():
