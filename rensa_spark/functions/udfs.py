@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -147,33 +146,6 @@ def rminhash_sig_udf(cfg: RensaConfig, from_hashes: bool = False, from_bytes: bo
     return _udf
 
 
-def rminhash_bands_udf(
-    cfg: RensaConfig,
-    fold: int = 1,
-    from_hashes: bool = False,
-    from_bytes: bool = False,
-):
-    """Fused hot path: text -> array<bigint> effective band hashes.
-
-    One Python crossing per batch; the signature matrix never leaves the
-    executor. This is the sketch+banding stage of the flagship one-shot
-    pipeline (src/lsh/one_shot.rs:294-332 fast path)."""
-    a, b = None, None
-    kind = "hashes" if from_hashes else ("bytes" if from_bytes else "text")
-
-    @pandas_udf(ArrayType(LongType()))
-    def _udf(col: pd.Series) -> pd.Series:
-        nonlocal a, b
-        if a is None:
-            a, b = _perms(cfg.num_perm, cfg.seed)
-        flat, offsets = _flat_for(col, cfg, kind)
-        sig = rminhash_matrix(flat, offsets, a, b)
-        bands = _band_hash_matrix(sig, cfg.num_bands, fold)
-        return _as_list_series(bands, np.int64)
-
-    return _udf
-
-
 SIG_BANDS_SCHEMA = StructType(
     [
         StructField("sig", ArrayType(IntegerType())),
@@ -189,10 +161,8 @@ def rminhash_sig_bands_udf(
     from_bytes: bool = False,
 ):
     """Fused text -> struct(sig, bands): ONE shingle+MinHash pass feeding
-    both the signature and its band hashes (round 6 — the separate
-    rminhash_sig_udf + rminhash_bands_udf pair recomputed the full
-    shingle+min-fold twice for every clusters/pairs lane; band hashing is
-    a pure function of the signature, so fusing is bit-identical)."""
+    both the signature and its band hashes. Band hashing is a pure function
+    of the signature, so a caller needing both never sketches twice."""
     a, b = None, None
     kind = "hashes" if from_hashes else ("bytes" if from_bytes else "text")
 
@@ -210,19 +180,6 @@ def rminhash_sig_bands_udf(
                 "bands": list(bands.view(np.int64)),
             }
         )
-
-    return _udf
-
-
-def band_hashes_udf(cfg: RensaConfig, fold: int = 1):
-    """array<int> signature -> array<bigint> effective band hashes
-    (digest_band_hashes, src/lsh/index.rs:73-81)."""
-
-    @pandas_udf(ArrayType(LongType()))
-    def _udf(sigs: pd.Series) -> pd.Series:
-        sig = _sig_matrix_from_series(sigs, cfg.num_perm)
-        bands = _band_hash_matrix(sig, cfg.num_bands, fold)
-        return _as_list_series(bands, np.int64)
 
     return _udf
 
@@ -341,11 +298,3 @@ def raw_fxhash_udf():
 
     return _udf
 
-
-def explode_bands(df, key_col: str, bands_col: str = "bands"):
-    """(key, bands[...]) -> (key, band_idx, band_hash) rows
-    (banding projection, src/lsh/index.rs:73-81 -> posexplode)."""
-    return df.select(
-        F.col(key_col),
-        F.posexplode(bands_col).alias("band_idx", "band_hash"),
-    )

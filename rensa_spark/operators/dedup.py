@@ -19,32 +19,28 @@ from rensa_spark.config import RensaConfig
 from rensa_spark.functions.udfs import (
     jaccard_udf,
     rho_sketch_udf,
-    rminhash_bands_udf,
+    rminhash_sig_bands_udf,
 )
 from rensa_spark.operators.cc import connected_components, survivors
 from rensa_spark.operators.lsh import candidate_pairs
 
 
 def sketch_rminhash(
-    df: DataFrame, cfg: RensaConfig, key_col: str, text_col: str, with_sig: bool = True
+    df: DataFrame, cfg: RensaConfig, key_col: str, text_col: str
 ) -> DataFrame:
-    """Add `sig` (and `bands`) columns. Hot path: only `bands` when the
-    signature itself is not needed downstream (flags-only pipelines).
-    With the signature, ONE fused UDF computes both (round 6): the former
-    separate sig/bands UDFs each re-ran the full shingle+MinHash pass —
-    banding is a pure function of the signature, so fusing is bit-equal."""
-    if with_sig:
-        from rensa_spark.functions.udfs import rminhash_sig_bands_udf
-
-        sb = rminhash_sig_bands_udf(cfg)
-        return (
-            df.withColumn("_sb", sb(F.col(text_col)))
-            .withColumn("bands", F.col("_sb.bands"))
-            .withColumn("sig", F.col("_sb.sig"))
-            .drop("_sb")
-        )
-    bands = rminhash_bands_udf(cfg)
-    return df.withColumn("bands", bands(F.col(text_col)))
+    """Add `sig` and `bands` columns from ONE fused shingle+MinHash pass
+    (the Spark analogue of src/lsh/one_shot.rs sketching each row once).
+    Every caller that needs both the signature and its band hashes takes
+    them from here; band rows are ``lsh.explode_bands`` over ``bands``.
+    Flags-only paths that never need the signature use
+    ``sketch.rminhash_band_rows`` instead."""
+    sb = rminhash_sig_bands_udf(cfg)
+    return (
+        df.withColumn("_sb", sb(F.col(text_col)))
+        .withColumn("bands", F.col("_sb.bands"))
+        .withColumn("sig", F.col("_sb.sig"))
+        .drop("_sb")
+    )
 
 
 def sketch_rho(df: DataFrame, cfg: RensaConfig, key_col: str, text_col: str) -> DataFrame:
@@ -57,7 +53,7 @@ def dup_flags(df: DataFrame, cfg: RensaConfig, key_col: str, text_col: str) -> D
     (= query_duplicate_flags_matrix_one_shot fast path on a matrix built
     from word-{ngram}-shingled text, the reference benchmark's accuracy
     metric, benchmarks/full_benchmark.py:542-547). Fused mapInPandas sketch
-    -> pre-exploded band rows -> window bucket count -> per-key max."""
+    -> pre-exploded band rows -> singleton-bucket count per key."""
     from rensa_spark.operators.lsh import one_shot_flags_from_bands
     from rensa_spark.operators.sketch import rminhash_band_rows
 
@@ -94,26 +90,6 @@ def verified_pairs(
         capped_metrics=capped_metrics,
     )
     sigs = sketched.select(F.col(key_col).alias("key"), "sig")
-    return _verify_pairs(pairs, sigs, cfg)
-
-
-def verified_pairs_from_band_rows(
-    band_rows: DataFrame, sigs: DataFrame, cfg: RensaConfig
-) -> DataFrame:
-    """Same, from (key, band_idx, band_hash) rows + (key, sig) table —
-    the checkpointed-pipeline path (band order already positional)."""
-    from rensa_spark.operators.lsh import candidate_pairs_from_band_rows
-
-    pairs = candidate_pairs_from_band_rows(
-        band_rows,
-        cfg.hot_bucket_cap,
-        sort_keys=sigs.select("key", F.col("sig").alias("sort_key")),
-        verify_threshold=cfg.threshold,
-    )
-    return _verify_pairs(pairs, sigs, cfg)
-
-
-def _verify_pairs(pairs: DataFrame, sigs: DataFrame, cfg: RensaConfig) -> DataFrame:
     jac = jaccard_udf(cfg)
     return (
         pairs.join(sigs.withColumnRenamed("key", "a").withColumnRenamed("sig", "sig_a"), "a")

@@ -22,12 +22,11 @@ Reproduces ``RMinHashLSH.query_duplicate_flags_matrix_one_shot``
   members through a window + collect.
 
 Skew note (north rule): degenerate content (e.g. thousands of empty
-captions) makes one giant band bucket. The default flag path aggregates
-bucket sizes with map-side partial counts (only counts move) and decides
-membership through a SALTED semi-join, spreading the hot bucket's rows over
-n_salts reducers — no single-task window sort anywhere on the flag path
-(round-3 change; the window variant survives for low-skew inputs). The
-sparse-member rho path bounds work per bucket at 17 members via a
+captions) makes one giant band bucket. The flag path
+(:func:`one_shot_flags_from_bands`) aggregates (count, min(key)) per bucket
+with map-side partial aggregation, so a hot bucket moves one row per map
+partition and no single-task window sort exists anywhere on the flag path.
+The sparse-member rho path bounds work per bucket at 17 members via a
 WindowGroupLimit; AQE skew-join splitting covers the remaining joins.
 """
 
@@ -67,9 +66,8 @@ def one_shot_flags_from_bands(
     everything. Both aggregates combine map-side: a degenerate bucket (e.g.
     100k empty captions sharing every band hash) collapses to one
     (count, min) row per map partition before the shuffle — no member list,
-    no per-bucket sort, no straggler task anywhere (the retired window
-    variant, one full sort partition per bucket, survives as
-    :func:`one_shot_flags_from_bands_window`; a dup-bucket join-back
+    no per-bucket sort, no straggler task anywhere (a window-count
+    variant put each bucket in one sort partition; a dup-bucket join-back
     variant measured ~40% worse at 200k rows — it scans the band rows
     twice). Band rows are consumed EXACTLY ONCE, so the upstream sketch UDF
     needs no checkpoint/persist.
@@ -110,28 +108,6 @@ def one_shot_flags_from_bands(
         .groupBy("key")
         .agg((F.sum("inc") < F.max("n_bands")).alias("is_dup"))
     )
-
-
-def one_shot_flags_from_bands_window(bands: DataFrame) -> DataFrame:
-    """Window-count variant of :func:`one_shot_flags_from_bands`: exactly two
-    shuffles, but a degenerate band bucket lands in ONE window partition
-    (single-task count). Equal results by construction; kept for the
-    equivalence test and for low-skew inputs where two shuffles win."""
-    w = Window.partitionBy("band_idx", "band_hash")
-    return (
-        bands.withColumn("bucket_size", F.count(F.lit(1)).over(w))
-        .groupBy("key")
-        .agg(F.max(F.col("bucket_size") >= 2).alias("is_dup"))
-    )
-
-
-def one_shot_dup_flags(
-    df: DataFrame, key_col: str, bands_col: str = "bands"
-) -> DataFrame:
-    """Array-column variant of :func:`one_shot_flags_from_bands` for inputs
-    that carry a precomputed ``bands`` array (e.g. a checkpointed signature
-    table)."""
-    return one_shot_flags_from_bands(explode_bands(df, key_col, bands_col))
 
 
 def _sparse_verify_match_col(my_sig, cand_sig, thr: float):

@@ -180,20 +180,24 @@ class LshIndex:
             "overwrite"
         ).parquet(self._path(name))
 
+    def _sketch(self, base: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """(key, text) -> ((key, sig), (key, band_idx, band_hash)) from one
+        sketch pass, checkpointed lazily because both outputs read it."""
+        from rensa_spark.operators.dedup import sketch_rminhash
+        from rensa_spark.operators.lsh import explode_bands
+
+        sk = sketch_rminhash(base, self.cfg, "key", "text").localCheckpoint(eager=False)
+        return sk.select("key", "sig"), explode_bands(sk, "key")
+
     def insert(self, df: DataFrame, cfg_key: str = "key", text_col: str = "text") -> None:
         """Sketch + band rows appended to the index (insert_matrix,
         src/lsh/py.rs:94-108), plus the signature table that backs
         jaccard-verified queries. Re-insert semantics (remove old first,
         src/lsh/index.rs:145-165) via tombstone + append at one new
         generation — existing row files are never rewritten."""
-        from rensa_spark.functions.udfs import rminhash_sig_udf
-        from rensa_spark.operators.sketch import rminhash_band_rows
-
         self._require_sigs_consistent()
         base = df.select(F.col(cfg_key).alias("key"), F.col(text_col).alias("text"))
-        new_bands = rminhash_band_rows(base, self.cfg, "key", "text")
-        sig = rminhash_sig_udf(self.cfg)
-        new_sigs = base.select("key", sig(F.col("text")).alias("sig"))
+        new_sigs, new_bands = self._sketch(base)
         existed = self._exists()
         if existed:
             self._migrate_if_legacy()
@@ -298,13 +302,11 @@ class LshIndex:
         not enough — each candidate's stored signature is checked against
         the query signature with the equal-slot-fraction jaccard."""
         self._require_sigs_consistent()
-        from rensa_spark.functions.udfs import jaccard_udf, rminhash_sig_udf
-        from rensa_spark.operators.sketch import rminhash_band_rows
+        from rensa_spark.functions.udfs import jaccard_udf
 
         base = df.select(F.col(key_col).alias("key"), F.col(text_col).alias("text"))
-        qbands = rminhash_band_rows(base, self.cfg, "key", "text")
-        sig = rminhash_sig_udf(self.cfg)
-        qsigs = base.select("key", sig(F.col("text")).alias("qsig"))
+        qsigs, qbands = self._sketch(base)
+        qsigs = qsigs.withColumnRenamed("sig", "qsig")
         cand = (
             qbands.join(
                 self.bands().withColumnRenamed("key", "index_key"),

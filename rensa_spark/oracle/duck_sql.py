@@ -624,9 +624,12 @@ def add_if_unique_sql(cfg: RensaConfig) -> str:
     """Oracle for _q_add_if_unique (sequential greedy semantics,
     src/inline_dedup/rminhash.rs:233-299): process docs in key order; keep a
     doc iff no earlier KEPT doc is an LSH candidate (shares a band bucket)
-    with signature jaccard >= threshold. Computed per connected component of
-    the conflict graph with an in-order list_reduce (components are small at
-    oracle SF; the decision never crosses components)."""
+    with signature jaccard >= threshold. A doc with no conflict edge is
+    always kept; the conflict docs are numbered in key order and one
+    recursive walk carries the kept list, appending each doc whose earlier
+    conflict neighbours (``preds``) are all absent from it. Every step reads
+    only its own row and the previous step's list, so the result does not
+    depend on join or aggregation order."""
     thr = cfg.threshold
     return f"""
 WITH RECURSIVE {shingle_hash_ctes(cfg)},
@@ -648,33 +651,25 @@ conflict AS MATERIALIZED (
     WHERE len(list_filter(generate_series(1, {cfg.num_perm}),
                           k -> sa.sl[k] = sb.sl[k]))::DOUBLE
           / {cfg.num_perm} >= {thr}),
-sym AS (SELECT a, b FROM conflict UNION ALL SELECT b, a FROM conflict),
-reach(v, u) AS (
-    SELECT doc_id, doc_id FROM docs
-    UNION
-    SELECT r.v, e.b FROM reach r JOIN sym e ON r.u = e.a),
-comp AS (SELECT v AS doc_id, min(u) AS cid FROM reach GROUP BY v),
-comp_members AS (
-    SELECT cid, list(doc_id ORDER BY doc_id) AS members FROM comp GROUP BY cid),
-comp_edges AS (
-    SELECT cm.cid, coalesce(list([e.a, e.b]), []) AS edges
-    FROM comp_members cm
-    LEFT JOIN (SELECT c.a, c.b, p.cid
-               FROM conflict c JOIN comp p ON p.doc_id = c.a) e ON e.cid = cm.cid
-    GROUP BY cm.cid),
-greedy AS (
-    SELECT m.cid,
-           list_reduce(
-               list_prepend([]::BIGINT[], m.members_wrapped),
-               (acc, x) -> CASE WHEN len(list_filter(e.edges,
-                        p -> p[2] = x[1] AND list_contains(acc, p[1]))) = 0
-                   THEN list_append(acc, x[1]) ELSE acc END) AS kept_keys
-    FROM (SELECT cid, list_transform(members, v -> [v]) AS members_wrapped
-          FROM comp_members) m
-    JOIN comp_edges e ON e.cid = m.cid)
-SELECT c.doc_id, list_contains(g.kept_keys, c.doc_id) AS kept
-FROM comp c JOIN greedy g ON g.cid = c.cid
-ORDER BY c.doc_id"""
+preds AS MATERIALIZED (
+    SELECT b AS doc_id, list(a) AS ps FROM conflict GROUP BY b),
+seq AS MATERIALIZED (
+    SELECT d.doc_id, row_number() OVER (ORDER BY d.doc_id) AS rn,
+           coalesce(p.ps, []::BIGINT[]) AS ps
+    FROM (SELECT a AS doc_id FROM conflict UNION SELECT b FROM conflict) d
+    LEFT JOIN preds p ON p.doc_id = d.doc_id),
+walk(rn, kept) AS (
+    SELECT 0::BIGINT, []::BIGINT[]
+    UNION ALL
+    SELECT o.rn, CASE WHEN len(list_intersect(w.kept, o.ps)) = 0
+                      THEN list_append(w.kept, o.doc_id) ELSE w.kept END
+    FROM walk w JOIN seq o ON o.rn = w.rn + 1),
+final AS (SELECT kept FROM walk ORDER BY rn DESC LIMIT 1)
+SELECT d.doc_id,
+       d.doc_id NOT IN (SELECT doc_id FROM seq)
+       OR list_contains(f.kept, d.doc_id) AS kept
+FROM docs d, final f
+ORDER BY d.doc_id"""
 
 
 def rho_dup_flags_sql(cfg: RensaConfig) -> str:

@@ -8,7 +8,8 @@ src/lsh/py.rs:342-368); at cluster scale the equivalent durable state is the
 stage output *table*. Each stage here writes its output to
 ``<base>/<stage>/`` plus a row in ``<base>/lineage/`` with per-partition row
 counts, and records completion in ``<base>/manifest.json`` keyed by the
-config hash. A re-run with the same config skips completed stages by reading
+config hash (with ``STAGE_LAYOUT`` folded in). A re-run with the same config
+and layout skips completed stages by reading
 their tables back (kill -9 between stages loses nothing but the in-flight
 stage).
 
@@ -20,6 +21,7 @@ code changes.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
@@ -29,6 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rensa_spark.config import RensaConfig
+
+# Names the stage-table schemas and is folded into the recorded stage hash,
+# so a checkpoint dir written under another layout is recomputed rather than
+# resumed (the layout before this one kept `bands` out of `signatures`).
+STAGE_LAYOUT = "signatures(key,sig,bands)"
 
 
 @dataclass
@@ -108,7 +115,9 @@ class DedupPipeline:
         self.store = CheckpointStore(base_dir, fmt)
         self.manifest = Manifest.load(base_dir)
         self.run_id = run_id
-        self.config_hash = cfg.config_hash()
+        self.config_hash = hashlib.sha256(
+            f"{cfg.config_hash()}:{STAGE_LAYOUT}".encode()
+        ).hexdigest()[:16]
         self.stage_log: list[dict] = []
 
     # ---- lineage ----
@@ -159,47 +168,35 @@ class DedupPipeline:
 
     # ---- stages ----
     def run(self, df: DataFrame, key_col: str, text_col: str) -> DataFrame:
-        from rensa_spark.functions.udfs import rminhash_sig_udf
+        from pyspark.sql import Observation
+
         from rensa_spark.operators.cc import connected_components, survivors
-        from rensa_spark.operators.dedup import dedup_edges
-        from rensa_spark.operators.lsh import one_shot_flags_from_bands
-        from rensa_spark.operators.sketch import rminhash_band_rows
+        from rensa_spark.operators.dedup import dedup_edges, sketch_rminhash
+        from rensa_spark.operators.lsh import explode_bands, one_shot_flags_from_bands
 
         src = df.select(F.col(key_col).alias("key"), F.col(text_col).alias("text"))
 
+        # the one pass over the text: signature and band hashes together
         sigs = self._run_stage(
             "signatures",
-            lambda: src.withColumn("sig", rminhash_sig_udf(self.cfg)("text")).select(
-                "key", "sig"
+            lambda: sketch_rminhash(src, self.cfg, "key", "text").select(
+                "key", "sig", "bands"
             ),
         )
-        bands = self._run_stage(
-            "bands", lambda: rminhash_band_rows(src, self.cfg, "key", "text")
-        )
+        bands = self._run_stage("bands", lambda: explode_bands(sigs, "key"))
         self._run_stage("flags", lambda: one_shot_flags_from_bands(bands))
 
-        from pyspark.sql import Observation
-
         obs = Observation("pipeline_pairs_buckets")
-
-        def _build_pairs():
-            sketched = sigs.join(
-                bands.groupBy("key").agg(
-                    F.sort_array(
-                        F.collect_list(F.struct("band_idx", "band_hash"))
-                    ).alias("_b")
-                ).select(
-                    "key", F.col("_b.band_hash").alias("bands")
-                ),
-                "key",
-            )
-            return dedup_edges(sketched, self.cfg, capped_metrics=obs)
 
         def _pairs_metrics() -> dict:
             m = dict(obs.get)
             return {k: int(v) if v is not None else 0 for k, v in m.items()}
 
-        pairs = self._run_stage("pairs", _build_pairs, metrics_fn=_pairs_metrics)
+        pairs = self._run_stage(
+            "pairs",
+            lambda: dedup_edges(sigs, self.cfg, capped_metrics=obs),
+            metrics_fn=_pairs_metrics,
+        )
         clusters = self._run_stage("clusters", lambda: connected_components(pairs))
         return self._run_stage(
             "survivors", lambda: survivors(clusters, sigs.select("key"))

@@ -879,28 +879,25 @@ def test_add_if_unique_brute_force_matches_lsh_on_small_input(spark):
             assert lsh[k], k
 
 
-def test_singleton_count_flags_equal_window_flags(spark):
-    """The (default) single-pass singleton-count flag path must equal the
-    window variant bit-for-bit, with and without an explicit (key, n_bands)
-    side, including a degenerate all-empty-caption block (one giant bucket
-    per band)."""
-    from rensa_spark.operators.lsh import (
-        one_shot_flags_from_bands,
-        one_shot_flags_from_bands_window,
-    )
+def test_singleton_count_flags_derived_keys_equal_explicit_keys(spark):
+    """The singleton-count flag path must give the same flags whether the
+    (key, n_bands) side is passed explicitly (dup_flags) or derived from the
+    band rows (the pipeline's flags stage), including a degenerate
+    all-empty-caption block (one giant bucket per band)."""
+    from rensa_spark.operators.lsh import one_shot_flags_from_bands
     from rensa_spark.operators.sketch import rminhash_band_rows
 
     pdf = generate_corpus(250, seed=42, with_images=False)
     pdf.loc[pdf.index[:40], "caption"] = ""  # degenerate block
     df = spark.createDataFrame(pdf[["image_id", "caption"]])
     bands = rminhash_band_rows(df, CFG, "image_id", "caption").localCheckpoint()
-    a = sorted(one_shot_flags_from_bands(bands).collect())
-    b = sorted(one_shot_flags_from_bands_window(bands).collect())
+    derived = sorted(one_shot_flags_from_bands(bands).collect())
     keys = df.select(
         F.col("image_id").alias("key"), F.lit(CFG.num_bands).alias("n_bands")
     )
-    c = sorted(one_shot_flags_from_bands(bands, keys=keys).collect())
-    assert a == b == c
+    explicit = sorted(one_shot_flags_from_bands(bands, keys=keys).collect())
+    assert derived == explicit
+    assert sum(r["is_dup"] for r in derived) >= 40
 
 
 def test_api_facade(spark):
@@ -1451,25 +1448,24 @@ def test_hot_bucket_ring_preserves_verified_chains(spark):
     verified edge past the hub's similarity radius; the signature-sorted
     ring edges restore them."""
     from rensa_spark.operators.cc import connected_components
-    from rensa_spark.operators.dedup import verified_pairs_from_band_rows
+    from rensa_spark.operators.dedup import verified_pairs
 
     perm, n = 20, 20
     # sig_i and sig_j agree on perm - |i-j| slots: adjacent jaccard = 0.95
     # (>= 0.92 threshold), distance >= 2 jaccard <= 0.90 (< threshold), and
-    # the hub (key 0) is dissimilar to every member past key 1
+    # the hub (key 0) is dissimilar to every member past key 1; every row
+    # sits in the one band bucket (band 0, hash 42)
     sigs_py = [[1] * i + [0] * (perm - i) for i in range(n)]
-    band_rows = spark.createDataFrame(
-        [(k, 0, 42) for k in range(n)], "key long, band_idx int, band_hash long"
-    )
-    sigs = spark.createDataFrame(
-        [(k, sigs_py[k]) for k in range(n)], "key long, sig array<int>"
+    sketched = spark.createDataFrame(
+        [(k, sigs_py[k], [42]) for k in range(n)],
+        "key long, sig array<int>, bands array<long>",
     )
 
     def comps(cap):
         cfg = RensaConfig(
             num_perm=perm, seed=1, threshold=0.92, num_bands=4, hot_bucket_cap=cap
         )
-        pairs = verified_pairs_from_band_rows(band_rows, sigs, cfg)
+        pairs = verified_pairs(sketched, cfg)
         cc = connected_components(pairs)
         return sorted((r["key"], r["cluster_id"]) for r in cc.collect())
 
@@ -1729,7 +1725,7 @@ def test_hot_bucket_exact_midpath_matches_uncapped(spark):
     task and recovers it."""
     from pyspark.sql import Observation
 
-    from rensa_spark.operators.dedup import verified_pairs_from_band_rows
+    from rensa_spark.operators.dedup import verified_pairs
 
     perm = 128
     rng = np.random.default_rng(7)
@@ -1741,9 +1737,10 @@ def test_hot_bucket_exact_midpath_matches_uncapped(spark):
     for i in range(10):
         rows.append((f"m{i:02d}", [i + 1] + rng.integers(10_000, 10**6, size=perm - 1).tolist()))
     rows.append(("a00", [500] + rng.integers(10**6, 10**7, size=perm - 1).tolist()))  # hub = min key
-    sigs = spark.createDataFrame(rows, "key string, sig array<int>")
-    band_rows = spark.createDataFrame(
-        [(k, 0, 42) for k, _ in rows], "key string, band_idx int, band_hash long"
+    # every row sits in the one band bucket (band 0, hash 42)
+    sketched = spark.createDataFrame(
+        [(k, sig, [42]) for k, sig in rows],
+        "key string, sig array<int>, bands array<long>",
     )
 
     def pairset(cap):
@@ -1752,7 +1749,7 @@ def test_hot_bucket_exact_midpath_matches_uncapped(spark):
         )
         return {
             (r["a"], r["b"])
-            for r in verified_pairs_from_band_rows(band_rows, sigs, cfg).collect()
+            for r in verified_pairs(sketched, cfg).collect()
         }
 
     capped = pairset(2)  # 13-member bucket > 2 -> exact mid path
@@ -1764,13 +1761,13 @@ def test_hot_bucket_exact_midpath_matches_uncapped(spark):
     # exact mid path available, heuristic_buckets counts only buckets past
     # exact_task_cap (none here), while capped_buckets still reports the
     # mid bucket
-    from rensa_spark.operators.lsh import candidate_pairs_from_band_rows
+    from rensa_spark.operators.lsh import candidate_pairs_from_band_rows, explode_bands
 
     obs = Observation("midpath")
     candidate_pairs_from_band_rows(
-        band_rows,
+        explode_bands(sketched, "key"),
         hot_bucket_cap=2,
-        sort_keys=sigs.select("key", F.col("sig").alias("sort_key")),
+        sort_keys=sketched.select("key", F.col("sig").alias("sort_key")),
         capped_metrics=obs,
         verify_threshold=0.8,
     ).count()

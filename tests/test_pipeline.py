@@ -110,3 +110,65 @@ def test_pairs_stage_records_bucket_metrics(spark, corpus_df, tmp_path):
     assert {"capped_buckets", "heuristic_buckets", "max_bucket_size"} <= set(m)
     assert m["heuristic_buckets"] == 0  # tiny corpus never exceeds the cap
     assert m["max_bucket_size"] >= 1
+
+
+def test_older_layout_checkpoints_are_recomputed(spark, corpus_df, tmp_path):
+    """A checkpoint dir written under the older stage layout (manifest hash =
+    the bare config hash, `signatures` without the `bands` column) must not
+    be resumed: its tables cannot feed the `bands` and `pairs` stages."""
+    base = str(tmp_path / "ckpt_old")
+    _, rows1 = _run(spark, corpus_df, base, "run-1")
+
+    sig_path = os.path.join(base, "signatures")
+    old_path = str(tmp_path / "signatures_old")
+    spark.read.parquet(sig_path).select("key", "sig").write.parquet(old_path)
+    shutil.rmtree(sig_path)
+    shutil.copytree(old_path, sig_path)
+    manifest_path = os.path.join(base, "manifest.json")
+    with open(manifest_path) as f:
+        manifest = json.load(f)
+    for info in manifest["stages"].values():
+        info["config_hash"] = CFG.config_hash()
+    with open(manifest_path, "w") as f:
+        json.dump(manifest, f)
+
+    pipe2, rows2 = _run(spark, corpus_df, base, "run-2")
+    assert [s["stage"] for s in pipe2.stage_log] == list(pipe2.STAGES)
+    assert all(not s["skipped"] for s in pipe2.stage_log), pipe2.stage_log
+    assert rows1 == rows2
+
+
+def test_stage_tables_equal_direct_operators(spark, tmp_path):
+    """The pipeline's bands, flags and pairs tables equal the stand-alone
+    operators (band-row generator, dup_flags, dedup_edges over one sketch)
+    on a corpus with exact duplicates and empty captions."""
+    from rensa_spark.operators.dedup import dedup_edges, dup_flags, sketch_rminhash
+    from rensa_spark.operators.sketch import rminhash_band_rows
+    from rensa_spark.plans.pipeline import DedupPipeline
+
+    pdf = generate_corpus(300, seed=7, with_images=False)[["image_id", "caption"]]
+    pdf.loc[pdf.index[:15], "caption"] = ""
+    pdf.loc[pdf.index[20:40], "caption"] = pdf["caption"].iloc[40]
+    df = spark.createDataFrame(pdf)
+    base = str(tmp_path / "ckpt_eq")
+    DedupPipeline(spark, CFG, base).run(df, "image_id", "caption")
+
+    def table(stage, cols):
+        return sorted(spark.read.parquet(os.path.join(base, stage)).select(*cols).collect())
+
+    def rows(frame, cols):
+        return sorted(frame.select(*cols).collect())
+
+    src = df.selectExpr("image_id AS key", "caption AS text")
+    band_cols = ["key", "band_idx", "band_hash"]
+    assert table("bands", band_cols) == rows(
+        rminhash_band_rows(src, CFG, "key", "text"), band_cols
+    )
+    flags = table("flags", ["key", "is_dup"])
+    assert flags == rows(dup_flags(df, CFG, "image_id", "caption"), ["key", "is_dup"])
+    assert sum(r["is_dup"] for r in flags) >= 15 + 21
+    pairs = table("pairs", ["a", "b"])
+    assert pairs == rows(
+        dedup_edges(sketch_rminhash(src, CFG, "key", "text"), CFG), ["a", "b"]
+    )
+    assert len(pairs) >= 14 + 20  # trivial edges of the two planted groups

@@ -198,3 +198,35 @@ def test_bucketed_stage_tables_join_without_shuffle(spark, tmp_path):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         for name in ("sigs_b", "flags_b"):
             spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_pipeline_reads_source_text_only_in_signatures_stage(
+    spark, image_table, tmp_path, monkeypatch
+):
+    """DedupPipeline sketches each document once: only the `signatures`
+    stage plan scans the source caption column; every later stage reads
+    checkpointed stage tables."""
+    from rensa_spark.plans.pipeline import DedupPipeline
+
+    plans = {}
+    run_stage = DedupPipeline._run_stage
+
+    def spy(self, stage, build, metrics_fn=None):
+        def traced():
+            out = build()
+            plans[stage] = _formatted_plan(out)
+            return out
+
+        return run_stage(self, stage, traced, metrics_fn)
+
+    monkeypatch.setattr(DedupPipeline, "_run_stage", spy)
+    DedupPipeline(spark, CFG, str(tmp_path / "ckpt")).run(
+        image_table, "image_id", "caption"
+    )
+    assert set(plans) == set(DedupPipeline.STAGES)
+    reads_text = {
+        stage
+        for stage, plan in plans.items()
+        if any("caption" in l for l in plan.splitlines() if "ReadSchema" in l)
+    }
+    assert reads_text == {"signatures"}
