@@ -141,7 +141,11 @@ class RensaConfig:
 
     # Spark-side knobs (no reference counterpart — distribution hygiene)
     shuffle_partitions: int = 32
-    hot_bucket_cap: int = 1 << 20  # guard: buckets above this only flag, never pair
+    # band buckets up to this size are paired by the full self-join
+    # (lsh.candidate_pairs); larger ones are verified in one task up to
+    # exact_task_cap members and get hub+ring edges beyond both caps.
+    # Flags see every bucket whatever its size.
+    hot_bucket_cap: int = 1 << 20
 
     def __post_init__(self) -> None:
         if self.num_perm <= 0:

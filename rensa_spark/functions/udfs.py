@@ -266,35 +266,3 @@ def jaccard_udf(cfg: RensaConfig):
         return pd.Series((a == b).mean(axis=1))
 
     return _udf
-
-
-def sparse_verify_sim_udf():
-    """(sparse_sig_a, sparse_sig_b) -> equal-slot fraction over the 8-slot
-    verify signatures (src/lsh/config.rs:126-139); null sig -> 1.0 (missing
-    signature passes, src/lsh/one_shot.rs:433-451)."""
-
-    @pandas_udf(DoubleType())
-    def _udf(sig_a: pd.Series, sig_b: pd.Series) -> pd.Series:
-        out = np.ones(len(sig_a))
-        for i, (x, y) in enumerate(zip(sig_a, sig_b)):
-            if x is None or y is None:
-                continue
-            xa = np.asarray(x)
-            ya = np.asarray(y)
-            out[i] = (xa == ya).mean() if len(xa) == len(ya) and len(xa) else 0.0
-        return pd.Series(out)
-
-    return _udf
-
-
-def raw_fxhash_udf():
-    """text -> bigint calculate_hash_fast of the whole UTF-8 string (exact-hash
-    keying; also the phash-style single-token path)."""
-
-    @pandas_udf(LongType())
-    def _udf(texts: pd.Series) -> pd.Series:
-        hashes = fxhash64([(t or "").encode("utf-8") for t in texts])
-        return pd.Series(hashes.view(np.int64))
-
-    return _udf
-

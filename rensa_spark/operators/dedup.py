@@ -245,6 +245,16 @@ def add_if_unique(
     frontier loop remains the scale path, bit-equal by construction
     (pinned by test_add_if_unique_driver_greedy_matches_loop).
 
+    Spark jobs run while the result is BUILT, not when it executes: with
+    ``use_lsh=False`` one ``count()`` of the input; then an eager
+    checkpoint of the verified conflict edges (the whole sketch + pair +
+    verify plan runs here) and one ``count()`` of them. The driver branch
+    adds one ``collect()`` of the edges; the frontier branch adds an eager
+    checkpoint and a ``count()`` of the state table per round, plus one
+    before the first. The driver-or-frontier branch, and every decision,
+    is fixed at build time: re-executing the returned DataFrame after the
+    input changes keeps the old answer.
+
     Returns (key, kept boolean).
     """
     import os

@@ -39,9 +39,19 @@ from pyspark.sql import functions as F
 
 from rensa_spark.config import RensaConfig
 
-# suffix source for per-call default CollectMetrics names (see
-# candidate_pairs_from_band_rows)
+# suffix source for per-call default CollectMetrics names
 _METRICS_SEQ = itertools.count()
+
+
+def _metrics_name(name, default: str):
+    """The observed-metric name an operator registers: the string
+    ``default`` gains a fresh ``_<n>`` suffix per call, because Spark's
+    analyzer rejects two CollectMetrics nodes with the same name in one
+    plan (round-4 advice: unioning two operators both left at the default
+    would fail to analyze). An explicit string (pinned for
+    QueryExecutionListener consumers), an Observation or None passes
+    through unchanged."""
+    return f"{default}_{next(_METRICS_SEQ)}" if name == default else name
 
 
 def explode_bands(df: DataFrame, key_col: str, bands_col: str = "bands") -> DataFrame:
@@ -143,6 +153,14 @@ def one_shot_dup_flags_rho(
 
     ``key_col`` must be an orderable id matching the reference's row order
     (the candidate cap is row-order-dependent, one_shot.rs:408-411).
+
+    When the recall rescue is on (``cfg.rho_recall_rescue_enabled`` and a
+    band fold > 1), one Spark job runs while the plan is BUILT: a
+    ``limit(1).count()`` over the rescue-eligible rows, which also
+    materializes the checkpointed match table. It decides whether the
+    rescue subtree is in the plan at all, and that branch is fixed at build
+    time: re-executing the returned DataFrame after the input changes keeps
+    it.
     """
     sv_enabled = cfg.rho_sparse_verify_enabled and cfg.sparse_verify_perm_clamped > 0
     required_sparse = cfg.rho_sparse_required_band_matches
@@ -370,14 +388,16 @@ def candidate_pairs_from_band_rows(
       uncapped results for every bucket up to exact_task_cap — including
       adversarial non-chain families (pinned by
       test_hot_bucket_exact_midpath_matches_uncapped).
-    - HUGE buckets (> exact_task_cap — at the default, >8192 DISTINCT
-      members sharing one band hash): hub edges (min key to each member)
-      PLUS ring edges over members sorted by ``sort_key`` (near-identical
-      rows sort adjacent, so transitive chains keep verified adjacent
-      edges). O(2n) edges; the verified graph there is a heuristic
-      subgraph, exact for families whose similarity is transitive along
-      the signature order — the caveat now applies ONLY beyond
-      exact_task_cap, and entering it is observable (heuristic_buckets).
+    - HUGE buckets (> max(hot_bucket_cap, exact_task_cap) — at the
+      lsh defaults, >8192 DISTINCT members sharing one band hash; a bucket
+      within hot_bucket_cap always takes the full self-join): hub edges
+      (min key to each member) PLUS ring edges over members sorted by
+      ``sort_key`` (near-identical rows sort adjacent, so transitive
+      chains keep verified adjacent edges). O(2n) edges; the verified
+      graph there is a heuristic subgraph, exact for families whose
+      similarity is transitive along the signature order — the caveat
+      applies ONLY beyond both caps, and entering it is observable
+      (heuristic_buckets).
       Without ``sort_keys``/``verify_threshold`` mid buckets fall back to
       this path too (legacy behavior).
 
@@ -387,8 +407,8 @@ def candidate_pairs_from_band_rows(
 
     ``capped_metrics``: observable signal (round-3 advice): a
     CollectMetrics node over the bucket sizes emitting ``capped_buckets``
-    (count over hot_bucket_cap), ``heuristic_buckets`` (count over
-    exact_task_cap — the only regime with approximate semantics) and
+    (count over hot_bucket_cap), ``heuristic_buckets`` (count of the
+    hub+ring buckets — the only regime with approximate semantics) and
     ``max_bucket_size``. Pass a string name to ship the metrics to every
     QueryExecutionListener / the Spark UI event log, a
     ``pyspark.sql.Observation`` to read them programmatically after the
@@ -397,14 +417,13 @@ def candidate_pairs_from_band_rows(
     operators in one plan never collides on observed-metric names.
     """
     exact_mid = sort_keys is not None and verify_threshold is not None
-    if capped_metrics == "rensa_capped_buckets":
-        # Spark's analyzer rejects two CollectMetrics nodes with the SAME
-        # name in one plan (round-4 advice: unioning two pair operators
-        # both left at the default would fail to analyze) — the string
-        # default derives a fresh name per call. Pass an explicit string
-        # to pin a name for QueryExecutionListener consumers, an
-        # Observation to read values programmatically, or None to disable.
-        capped_metrics = f"rensa_capped_buckets_{next(_METRICS_SEQ)}"
+    # buckets above this take the hub+ring path. The self-join serves every
+    # bucket up to hot_bucket_cap, so the heuristic never starts below it,
+    # even when exact_task_cap is the smaller cap
+    heuristic_cap = hot_bucket_cap
+    if exact_mid:
+        heuristic_cap = max(hot_bucket_cap, exact_task_cap)
+    capped_metrics = _metrics_name(capped_metrics, "rensa_capped_buckets")
     sizes = bands.groupBy("band_idx", "band_hash").agg(
         F.count(F.lit(1)).alias("bucket_size")
     )
@@ -415,11 +434,7 @@ def candidate_pairs_from_band_rows(
                 F.when(F.col("bucket_size") > hot_bucket_cap, 1).otherwise(0)
             ).alias("capped_buckets"),
             F.sum(
-                F.when(
-                    F.col("bucket_size")
-                    > (exact_task_cap if exact_mid else hot_bucket_cap),
-                    1,
-                ).otherwise(0)
+                F.when(F.col("bucket_size") > heuristic_cap, 1).otherwise(0)
             ).alias("heuristic_buckets"),
             F.max("bucket_size").alias("max_bucket_size"),
         )
@@ -483,10 +498,9 @@ def candidate_pairs_from_band_rows(
         mid_pairs = mid_m.groupBy("band_idx", "band_hash").applyInPandas(
             bucket_verify, f"a {key_type}, b {key_type}"
         )
-        big = bands_sized.filter(F.col("bucket_size") > exact_task_cap)
     else:
         mid_pairs = None
-        big = bands_sized.filter(F.col("bucket_size") > hot_bucket_cap)
+    big = bands_sized.filter(F.col("bucket_size") > heuristic_cap)
 
     hubs = big.groupBy("band_idx", "band_hash").agg(F.min("key").alias("hub"))
     big_pairs = (

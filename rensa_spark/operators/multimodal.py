@@ -235,33 +235,6 @@ def image_stats(df: DataFrame, bytes_col: str = "bytes", fmt_col: str = "fmt") -
     return df.mapInPandas(gen, out_schema)
 
 
-def resize_stub(df: DataFrame, w: int, h: int) -> DataFrame:
-    """Resize plumbing: schema + UDF signature are real, the pixel resample
-    is a deterministic fake (nearest-neighbor index math on PPM, stub
-    elsewhere)."""
-
-    def gen(batches):
-        from rensa_spark.sources.synthetic import encode_ppm
-
-        for pdf in batches:
-            out = []
-            for data, fmt in zip(pdf["bytes"], pdf["fmt"]):
-                if data is None:
-                    out.append(None)
-                    continue
-                px = decode_pixels(data, fmt)
-                yi = (np.arange(h) * px.shape[0] // h).astype(np.int64)
-                xi = (np.arange(w) * px.shape[1] // w).astype(np.int64)
-                out.append(encode_ppm(px[yi][:, xi]))
-            pdf = pdf.copy()
-            pdf["bytes"] = out
-            pdf["w"] = np.int32(w)
-            pdf["h"] = np.int32(h)
-            yield pdf
-
-    return df.mapInPandas(gen, df.schema)
-
-
 def verify_payload_invariants(
     before: DataFrame, after: DataFrame, key_col: str = "image_id", sample: float = 0.1
 ) -> pd.DataFrame:

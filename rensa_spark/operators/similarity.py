@@ -13,19 +13,49 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.types import ArrayType, IntegerType, LongType
 
 from rensa_spark.config import RensaConfig
 from rensa_spark.kernels.prng import Xoshiro256PlusPlus
+from rensa_spark.operators.lsh import _metrics_name, one_shot_flags_from_bands
 
 
 def _normalize(m: np.ndarray) -> np.ndarray:
     norms = np.linalg.norm(m, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     return m / norms
+
+
+def _stack(values, dtype, dim: int) -> np.ndarray:
+    """(rows, dim) ``dtype`` matrix of an array column's per-row values:
+    the one Arrow batch -> matrix crossing. An empty batch is (0, dim)."""
+    if not len(values):
+        return np.empty((0, dim), dtype=dtype)
+    return np.stack(list(values)).astype(dtype, copy=False)
+
+
+def _vec_dim(df: DataFrame, vec_col: str) -> int:
+    """Vector length of the first non-null row (one small Spark job)."""
+    return len(df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()[0])
+
+
+def _rank_topk(partial: DataFrame, k: int) -> DataFrame:
+    """(qid, neighbor_id, score) partial rows -> (qid, rank, neighbor_id):
+    the per-qid top-k by (score desc, neighbor_id asc)."""
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    return (
+        partial.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("qid", "rank", "neighbor_id")
+        .orderBy("qid", "rank")
+    )
 
 
 def brute_force_topk(
@@ -37,7 +67,8 @@ def brute_force_topk(
 ) -> DataFrame:
     """-> (qid, rank, neighbor_id) exact cosine top-k per query."""
     qids = list(queries["qid"])
-    qmat = _normalize(np.array([np.asarray(v, dtype=np.float64) for v in queries["vec"]]))
+    dim = len(queries["vec"].iloc[0])
+    qmat = _normalize(_stack(queries["vec"], np.float64, dim))
 
     id_type = df.schema[id_col].dataType.simpleString()
     qid_type = "string" if isinstance(qids[0], str) else "long"
@@ -48,9 +79,7 @@ def brute_force_topk(
             if not len(pdf):
                 continue
             ids = pdf[id_col].values
-            m = _normalize(
-                np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            )
+            m = _normalize(_stack(pdf[vec_col], np.float64, dim))
             scores = m @ qmat.T  # (rows, nq)
             top = min(k, len(ids))
             part = np.argpartition(-scores, top - 1, axis=0)[:top]  # (top, nq)
@@ -68,18 +97,7 @@ def brute_force_topk(
                 )
             yield pd.concat(out, ignore_index=True)
 
-    partial = df.select(id_col, vec_col).mapInPandas(gen, schema)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "neighbor_id")
-        .orderBy("qid", "rank")
-    )
+    return _rank_topk(df.select(id_col, vec_col).mapInPandas(gen, schema), k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
@@ -106,9 +124,7 @@ def quantized_hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     the vectors, see :func:`quantize_vecs`) makes every bucket sign decision
     EXACT int64 arithmetic — bit-reproducible across Spark, numpy and the
     DuckDB oracle (round-2 verdict ask #4: no float sign decisions)."""
-    return np.floor(_hyperplanes(dim, n_planes, seed) * QUANT_SCALE).astype(
-        np.int64
-    )
+    return quantize_vecs(_hyperplanes(dim, n_planes, seed))
 
 
 def quantize_vecs(m: np.ndarray) -> np.ndarray:
@@ -118,17 +134,77 @@ def quantize_vecs(m: np.ndarray) -> np.ndarray:
     return np.floor(m.astype(np.float64) * QUANT_SCALE).astype(np.int64)
 
 
-def _quant_scores(mq: np.ndarray, qq: np.ndarray) -> np.ndarray:
-    """(rows, nq) scores = dot / (|a| * |b|) from int64 fixed-point vectors.
-    Every input to the float expression is an exact integer < 2^53 and the
-    expression shape (sqrt, mul, div — each correctly rounded once) is the
-    same one the SQL oracle evaluates, so the doubles are bit-identical."""
-    dots = (mq @ qq.T).astype(np.float64)
-    na = np.sqrt((mq * mq).sum(axis=1).astype(np.float64))  # (rows,)
-    nb = np.sqrt((qq * qq).sum(axis=1).astype(np.float64))  # (nq,)
-    denom = na[:, None] * nb[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return np.where(denom > 0, dots / denom, 0.0)
+def _qvec(c):
+    """int64 fixed-point vector column, JVM-side: the column form of
+    :func:`quantize_vecs`, floor(v * 2^20) per element (exact)."""
+    return F.transform(
+        c, lambda x: F.floor(x.cast("double") * F.lit(float(QUANT_SCALE))).cast("long")
+    )
+
+
+def _bucket_ids(mq: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """Sign-pattern bucket per int64 fixed-point row: bit j is set iff
+    mq . planes[j] > 0 — an exact int64 sign decision, and sign(dot) is
+    scale-invariant, so the vectors need no normalization."""
+    signs = (mq @ planes.T) > 0
+    return signs.astype(np.int64) @ (1 << np.arange(len(planes), dtype=np.int64))
+
+
+def _bucket_col(vec_col: str, planes: np.ndarray):
+    """Bucket column of a float vector column: one Arrow-batched UDF
+    quantizes and buckets each batch (:func:`_bucket_ids`).
+
+    coalesce makes the join key non-nullable: without it Catalyst pushes an
+    isnotnull(bucket) filter below the projection and DUPLICATES the Python
+    UDF (two ArrowEvalPython nodes = 2x Arrow serialization of every
+    vector; observed in the formatted plan). -1 is unreachable (the UDF
+    never returns null), it exists only to fix the nullability."""
+    dim = planes.shape[1]
+
+    @pandas_udf(LongType())
+    def bucket_udf(vecs: pd.Series) -> pd.Series:
+        mq = quantize_vecs(_stack(vecs, np.float64, dim))
+        return pd.Series(_bucket_ids(mq, planes))
+
+    return F.coalesce(bucket_udf(vec_col), F.lit(-1))
+
+
+def _topk(Q: np.ndarray, C: np.ndarray, cids: np.ndarray, k: int):
+    """Fixed-point cosine top-k of the int64 query rows ``Q`` over the int64
+    corpus rows ``C`` with ids ``cids`` -> flat (query row, neighbor id,
+    score) arrays: min(k, len(C)) rows per query, ordered by (score desc,
+    id asc). ``Q`` must be non-empty.
+
+    score = dot / (|q| * |c|), and 0 when either norm is 0. The int64 dot
+    and squared norms are exact integers < 2^53 and sqrt, mul and div each
+    round once — the expression the SQL oracle evaluates, so the doubles
+    are bit-identical on every engine. Queries go through the matmul 4096
+    rows at a time."""
+    perm = np.argsort(cids, kind="stable")
+    C, cids = C[perm], cids[perm]
+    nc = np.sqrt((C * C).sum(axis=1).astype(np.float64))
+    top = min(k, len(cids))
+    qi, nid, score = [], [], []
+    for lo in range(0, len(Q), 4096):
+        q = Q[lo : lo + 4096]
+        nq = np.sqrt((q * q).sum(axis=1).astype(np.float64))
+        denom = nq[:, None] * nc[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            S = np.where(denom > 0, (q @ C.T).astype(np.float64) / denom, 0.0)
+        # the columns are in id order, so one stable argsort on -score
+        # keeps the id tie-break
+        order = np.argsort(-S, axis=1, kind="stable")[:, :top]
+        qi.append(np.repeat(np.arange(lo, lo + len(q)), top))
+        nid.append(cids[order].reshape(-1))
+        score.append(np.take_along_axis(S, order, axis=1).reshape(-1))
+    return np.concatenate(qi), np.concatenate(nid), np.concatenate(score)
+
+
+def _partial_frame(parts) -> pd.DataFrame:
+    """(qid, neighbor_id, score) frame from (qids, neighbor ids, scores)
+    triples of :func:`_topk` results."""
+    qid, nid, score = (np.concatenate(c) for c in zip(*parts))
+    return pd.DataFrame({"qid": qid, "neighbor_id": nid, "score": score})
 
 
 def hyperplane_bucket_topk(
@@ -149,74 +225,43 @@ def hyperplane_bucket_topk(
     bit-reproducible across engines and SQL-checkable (verdict ask #4);
     sign(dot) is scale-invariant, so skipping normalization changes nothing.
     """
-    planes = None
-
-    def bucket_of(mq: np.ndarray) -> np.ndarray:
-        signs = (mq @ planes.T) > 0  # (rows, planes) — exact int64
-        powers = (1 << np.arange(n_planes, dtype=np.int64))
-        return signs.astype(np.int64) @ powers
-
-    dim = len(np.asarray(queries["vec"].iloc[0]))
+    dim = len(queries["vec"].iloc[0])
     planes = quantized_hyperplanes(dim, n_planes, seed)
-    qq = quantize_vecs(
-        np.array([np.asarray(v, dtype=np.float64) for v in queries["vec"]])
-    )
-    q_buckets = bucket_of(qq)
-    # multiprobe: query bucket + all 1-bit flips
-    probe_sets = []
-    for qi, b in enumerate(q_buckets):
-        probes = {int(b)} | {int(b) ^ (1 << p) for p in range(n_planes)}
-        probe_sets.append(probes)
-    wanted = sorted({p for s in probe_sets for p in s})
-    qids = list(queries["qid"])
+    qq = quantize_vecs(_stack(queries["vec"], np.float64, dim))
+    qids = queries["qid"].to_numpy()
+    q_buckets = _bucket_ids(qq, planes)
+    # multiprobe: a query's own bucket + all 1-bit flips. Queries in one
+    # bucket share the probe set, so each bucket's queries score together.
+    groups = [
+        (
+            np.nonzero(q_buckets == b)[0],
+            np.array([b] + [b ^ (1 << p) for p in range(n_planes)]),
+        )
+        for b in np.unique(q_buckets)
+    ]
+    wanted = np.unique(np.concatenate([probes for _, probes in groups]))
 
     id_type = df.schema[id_col].dataType.simpleString()
     qid_type = "string" if isinstance(qids[0], str) else "long"
     schema = f"qid {qid_type}, neighbor_id {id_type}, score double"
 
     def gen(batches):
-        wanted_arr = np.array(wanted, dtype=np.int64)
         for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].values
-            mq = quantize_vecs(
-                np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            )
-            buckets = bucket_of(mq)
-            keep = np.isin(buckets, wanted_arr)
+            mq = quantize_vecs(_stack(pdf[vec_col], np.float64, dim))
+            buckets = _bucket_ids(mq, planes)
+            keep = np.isin(buckets, wanted)
             if not keep.any():
                 continue
-            ids, mq, buckets = ids[keep], mq[keep], buckets[keep]
-            scores = _quant_scores(mq, qq)
-            out = []
-            for qi in range(len(qids)):
-                cand = np.isin(buckets, np.array(sorted(probe_sets[qi]), dtype=np.int64))
-                if not cand.any():
-                    continue
-                s = scores[cand, qi]
-                cids = ids[cand]
-                # TIE-SAFE partition top-k (argpartition would cut score ties
-                # at the k boundary arbitrarily): lexsort on (-score, id)
-                sel = np.lexsort((cids, -s))[: min(k, len(s))]
-                out.append(
-                    pd.DataFrame(
-                        {"qid": qids[qi], "neighbor_id": cids[sel], "score": s[sel]}
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            ids, mq, buckets = pdf[id_col].values[keep], mq[keep], buckets[keep]
+            parts = []
+            for rows, probes in groups:
+                cand = np.isin(buckets, probes)
+                if cand.any():
+                    qi, nid, score = _topk(qq[rows], mq[cand], ids[cand], k)
+                    parts.append((qids[rows][qi], nid, score))
+            yield _partial_frame(parts)
 
-    partial = df.select(id_col, vec_col).mapInPandas(gen, schema)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "neighbor_id")
-        .orderBy("qid", "rank")
-    )
+    return _rank_topk(df.select(id_col, vec_col).mapInPandas(gen, schema), k)
 
 
 def _sign_sub_bucket(vq_col: str, planes2: np.ndarray):
@@ -256,6 +301,15 @@ def _sign_sub_bucket(vq_col: str, planes2: np.ndarray):
     return out
 
 
+def _hot_sub(size_col: str, cap: int, vq_col: str, planes2: np.ndarray):
+    """Sub-bucket column: the ``planes2`` sign pattern of ``vq_col`` where
+    the bucket's ``size_col`` exceeds ``cap``, else 0. When() keeps the
+    sub-bucket expression lazy on the rows of small buckets."""
+    return F.when(
+        F.col(size_col) > cap, F.coalesce(_sign_sub_bucket(vq_col, planes2), F.lit(0))
+    ).otherwise(F.lit(0))
+
+
 def bucketed_topk_join(
     df: DataFrame,
     id_col: str,
@@ -282,14 +336,14 @@ def bucketed_topk_join(
     UDF); the query side explodes to its own bucket plus all 1-bit flips
     (multiprobe, same probe set as the broadcast lane), the corpus side is
     keyed by its single bucket, and the ONE data shuffle keys both sides
-    by ``(bucket, sub)`` into a COGROUPED applyInPandas that scores each
-    group with one numpy matmul and emits only the in-group top-k — the
-    candidate set is never materialized as rows (round 5: per-pair
-    expression scoring measured ~3 us/row; the group matmul is BLAS and
-    its output is min(k, nc) rows per (query, probe)). A corpus row
-    occupies exactly one (bucket, sub) and the probe set per query is
-    distinct, so (qid, neighbor) pairs are already unique — the final
-    per-qid window just merges <= probes*k partial rows per query.
+    by ``(bucket, sub)`` into a segment scan that scores each group with
+    one numpy matmul and emits only the in-group top-k — the candidate set
+    is never materialized as rows (round 5: per-pair expression scoring
+    measured ~3 us/row; the group matmul's output is min(k, nc) rows per
+    (query, probe)). A corpus row occupies exactly one (bucket, sub) and
+    the probe set per query is distinct, so (qid, neighbor) pairs are
+    already unique — the final per-qid window just merges <= probes*k
+    partial rows per query.
 
     Scale shape (round-4 verdict ask #1 — the fixed 2^n_planes bucket
     domain made the equi-join O(n^2 * probes / 2^n_planes) at large n; the
@@ -317,17 +371,21 @@ def bucketed_topk_join(
       (the common "every row is a query" call), the quantize+bucket side is
       computed ONCE (one scan, one Arrow crossing) and lazily checkpointed;
       corpus and query sides are projections of it.
-    - SMALL-INPUT BYPASS (round-5 verdict ask #2): a self-join whose corpus
-      has <= ``broadcast_max_rows`` rows (env RENSA_TOPK_BCAST_MAX, default
-      4096) dispatches to the broadcast scorer ``hyperplane_bucket_topk`` —
-      the same probe set, the same exact int64 fixed-point scores and the
-      same (score desc, id asc) tie-break, so the output rows are identical
-      — skipping ~5s of collapse/cogroup machinery that only pays for
+    - SMALL-INPUT BYPASS (round-5 verdict ask #2): a self-join of
+      n <= min(``broadcast_max_rows``, ``hot_bucket_cap``) rows
+      (``broadcast_max_rows``: env RENSA_TOPK_BCAST_MAX, default 4096)
+      dispatches to the broadcast scorer ``hyperplane_bucket_topk``. No
+      bucket can exceed the cap at that size, so there is no sub-split, and
+      the probe set, the exact int64 fixed-point scores and the (score desc,
+      id asc) tie-break are the same: the output rows are identical, and
+      the qid column is cast to ``queries_df``'s qid type, so the schema is
+      too. It skips ~5s of collapse/scan machinery that only pays for
       itself at scale. The threshold bounds driver+executor memory at
       n*(dim*8+8) bytes (~2 MB at dim 64) and the full score matmul at
       n^2*dim flops (~1 GFLOP) — input-size-adaptive like AQE's broadcast
       decision, not a local[32] tuning. Skipped when ``capped_metrics`` is
-      an Observation (the caller asked to read bucket stats).
+      an Observation (the caller asked to read bucket stats); a NAMED
+      ``capped_metrics`` is not emitted on the bypass.
     - QUERY-SIDE GROUP BOUND (round-5 verdict ask #1): a one-row probe
       aggregate decides adaptively whether any bucket's probing-query
       count exceeds ``query_group_cap`` (env RENSA_TOPK_QUERY_CAP, default
@@ -339,45 +397,24 @@ def bucketed_topk_join(
       keep the salt-free round-5 plan. Each (query, corpus) pair still
       meets exactly once; the final per-qid window merges partials, so
       results are unchanged either way.
+
+    Spark jobs run while the plan is BUILT, not when it executes: one
+    ``first()`` to infer ``dim`` when it is None, one ``first()`` over the
+    probe-count aggregate (it also materializes the quantize+bucket
+    checkpoint), and on the bypass one ``toPandas()`` of the queries. The
+    bypass and salt branches are fixed from the data at build time: the
+    returned DataFrame keeps its branch if it is re-executed after the
+    input changes.
     """
     if broadcast_max_rows is None:
-        import os
-
         broadcast_max_rows = int(os.environ.get("RENSA_TOPK_BCAST_MAX", "4096"))
     if query_group_cap is None:
-        import os
-
         query_group_cap = int(os.environ.get("RENSA_TOPK_QUERY_CAP", "16384"))
     if dim is None:
-        dim = len(
-            np.asarray(
-                queries_df.select(qvec_col).filter(F.col(qvec_col).isNotNull()).first()[0]
-            )
-        )
+        dim = _vec_dim(queries_df, qvec_col)
     planes = quantized_hyperplanes(dim, n_planes, seed)
     planes2 = quantized_hyperplanes(dim, extra_planes, seed + 7919)
 
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import LongType
-
-    @pandas_udf(LongType())
-    def bucket_udf(vecs: pd.Series) -> pd.Series:
-        mq = quantize_vecs(np.array([np.asarray(v, dtype=np.float64) for v in vecs]))
-        signs = (mq @ planes.T) > 0  # exact int64 sign decisions
-        powers = 1 << np.arange(n_planes, dtype=np.int64)
-        return pd.Series(signs.astype(np.int64) @ powers)
-
-    def _qvec(c):
-        # int64 fixed-point vector, JVM-side (floor(v * 2^20), exact)
-        return F.transform(
-            c, lambda x: F.floor(x.cast("double") * F.lit(float(QUANT_SCALE))).cast("long")
-        )
-
-    # coalesce makes the join key non-nullable: without it Catalyst pushes an
-    # isnotnull(bucket) filter below the projection and DUPLICATES the Python
-    # UDF (two ArrowEvalPython nodes = 2x Arrow serialization of every
-    # corpus vector; observed in the formatted plan). -1 is unreachable (the
-    # UDF never returns null), it exists only to fix the nullability.
     shared = (queries_df is df) and (qid_col == id_col) and (qvec_col == vec_col)
     side = None
     if shared:
@@ -385,8 +422,8 @@ def bucketed_topk_join(
         # quantize+bucket projection is computed once and checkpointed
         side = df.select(
             F.col(id_col).alias("vid"),
-            _qvec(F.col(vec_col)).alias("vq"),
-            F.coalesce(bucket_udf(F.col(vec_col)), F.lit(-1)).alias("bucket"),
+            _qvec(vec_col).alias("vq"),
+            _bucket_col(vec_col, planes).alias("bucket"),
         ).localCheckpoint(eager=False)
         qbase = side.select(
             F.col("vid").alias("qid"),
@@ -396,8 +433,8 @@ def bucketed_topk_join(
     else:
         qbase = queries_df.select(
             F.col(qid_col).alias("qid"),
-            _qvec(F.col(qvec_col)).alias("qvec"),
-            F.coalesce(bucket_udf(F.col(qvec_col)), F.lit(-1)).alias("qbucket"),
+            _qvec(qvec_col).alias("qvec"),
+            _bucket_col(qvec_col, planes).alias("qbucket"),
         ).localCheckpoint(eager=False)  # consumed by probe counts + the join
     probe_array = F.array(
         F.col("qbucket"),
@@ -416,21 +453,22 @@ def bucketed_topk_join(
     ).first()
     max_nq = _stats["mx"]
     n_queries = (_stats["tot"] or 0) // (n_planes + 1)
-    from pyspark.sql import Observation
+    qid_type = queries_df.schema[qid_col].dataType.simpleString()
+    id_type = df.schema[id_col].dataType.simpleString()
 
     if (
         shared
         and not isinstance(capped_metrics, Observation)
-        and n_queries <= broadcast_max_rows
-        and n_queries > 0
+        and 0 < n_queries <= min(broadcast_max_rows, hot_bucket_cap)
     ):
-        # small-input bypass: same probes, same exact scores, same
-        # tie-break — identical rows via the broadcast scorer
-        qpdf = queries_df.select(qid_col, qvec_col).toPandas()
-        q = pd.DataFrame({"qid": qpdf[qid_col], "vec": qpdf[qvec_col]})
+        # small-input bypass: no bucket can pass the cap, so the same
+        # probes, exact scores and tie-break give identical rows
+        q = queries_df.select(
+            F.col(qid_col).alias("qid"), F.col(qvec_col).alias("vec")
+        ).toPandas()
         return hyperplane_bucket_topk(
             df, id_col, vec_col, q, k=k, n_planes=n_planes, seed=seed
-        )
+        ).withColumn("qid", F.col("qid").cast(qid_type))
     if shared:
         corpus = side.select(
             F.col("vid").alias("neighbor_id"),
@@ -440,8 +478,8 @@ def bucketed_topk_join(
     else:
         corpus = df.select(
             F.col(id_col).alias("neighbor_id"),
-            _qvec(F.col(vec_col)).alias("nvec"),
-            F.coalesce(bucket_udf(F.col(vec_col)), F.lit(-1)).alias("bucket"),
+            _qvec(vec_col).alias("nvec"),
+            _bucket_col(vec_col, planes).alias("bucket"),
         )
     # EXACT identical-vector collapse (scale step 1 in the docstring):
     # keep only the k smallest neighbor ids per identical quantized vector
@@ -460,11 +498,8 @@ def bucketed_topk_join(
     # joins would either double-count its sum on re-execution or trip the
     # duplicate-observed-metrics analyzer check
     sizes = sizes_raw
+    capped_metrics = _metrics_name(capped_metrics, "rensa_topk_capped_buckets")
     if capped_metrics is not None:
-        if capped_metrics == "rensa_topk_capped_buckets":
-            from rensa_spark.operators.lsh import _METRICS_SEQ
-
-            capped_metrics = f"rensa_topk_capped_buckets_{next(_METRICS_SEQ)}"
         sizes = sizes_raw.observe(
             capped_metrics,
             F.sum(
@@ -472,23 +507,21 @@ def bucketed_topk_join(
             ).alias("capped_buckets"),
             F.max("n_in_bucket").alias("max_bucket_rows"),
         )
-    _hot_sub = lambda vq_name: F.when(  # noqa: E731
-        F.col("n_in_bucket") > hot_bucket_cap,
-        F.coalesce(_sign_sub_bucket(vq_name, planes2), F.lit(0)),
-    ).otherwise(F.lit(0))
     salted = max_nq is not None and max_nq > query_group_cap
     # no broadcast hint on the OBSERVED side: re-executions of a broadcast
     # exchange wrapping a CollectMetrics node spam accumulator-lookup
     # errors after the first job unregisters it (observed in the 50k
     # smoke); AQE still picks a broadcast join for the 2^n_planes-row
     # aggregate on its own, through a path that re-registers cleanly
-    corpus = corpus.join(sizes, "bucket").withColumn("sub", _hot_sub("nvec"))
+    corpus = corpus.join(sizes, "bucket").withColumn(
+        "sub", _hot_sub("n_in_bucket", hot_bucket_cap, "nvec", planes2)
+    )
     qside = (
         qprobes
         # a probe bucket absent from sizes has no candidates anyway — the
-        # inner join drops it before the cogroup instead of after
+        # inner join drops it before the scan instead of after
         .join(F.broadcast(sizes_raw), "bucket")
-        .withColumn("sub", _hot_sub("qvec"))
+        .withColumn("sub", _hot_sub("n_in_bucket", hot_bucket_cap, "qvec", planes2))
     )
     group_keys = ["bucket", "sub"]
     if salted:
@@ -501,7 +534,7 @@ def bucketed_topk_join(
             .alias("n_salt"),
         )
         # the salts inner join also drops corpus buckets no query probes —
-        # their cogroup groups would have been empty anyway
+        # their groups would have been empty anyway
         corpus = (
             corpus.join(F.broadcast(salts), "bucket")
             .withColumn(
@@ -520,24 +553,16 @@ def bucketed_topk_join(
     corpus = corpus.drop("n_in_bucket")
     qside = qside.drop("n_in_bucket")
     # Scoring runs per (bucket, sub) GROUP as one numpy matmul with an
-    # in-group partial top-k — NEVER per candidate row: materializing the
-    # equi-join and evaluating the cosine expression per pair measured
-    # ~3 us/row (the 64-getItem unroll and the HOF lambda both evaluate
-    # outside any fast path at this expression size), i.e. 20s for a
-    # 5.8M-candidate degenerate lane, whereas the group matmul is BLAS and
-    # only min(k, nc) rows per (query, probe) ever leave the group — the
-    # exchange after carries <= probes*k rows per query instead of the
-    # full candidate set.
-    # Exactness: the int64 dot is exact, and score = dot / (sqrt(qn2) *
-    # sqrt(nn2)) is three correctly-rounded float64 ops — bit-identical in
-    # numpy, the JVM, and the DuckDB oracle (the round-3 fixed-point ANN
-    # contract). In-group ties order by (score desc, neighbor_id asc) via
-    # chained stable argsorts, matching the final window exactly.
+    # in-group partial top-k (_topk) — NEVER per candidate row:
+    # materializing the equi-join and evaluating the cosine expression per
+    # pair measured ~3 us/row (the 64-getItem unroll and the HOF lambda
+    # both evaluate outside any fast path at this expression size), i.e.
+    # 20s for a 5.8M-candidate degenerate lane, whereas only min(k, nc)
+    # rows per (query, probe) ever leave the group — the exchange after
+    # carries <= probes*k rows per query instead of the full candidate set.
     # Group memory ~ (nq + nc) * dim * 8B; nc is bounded by the cap /
     # sub-split, nq chunks at 4096 rows per matmul.
-    qid_type = queries_df.schema[qid_col].dataType.simpleString()
-    id_type = df.schema[id_col].dataType.simpleString()
-
+    #
     # Round 6: the cogrouped applyInPandas paid a per-GROUP toll (each
     # (bucket, sub) group is its own Arrow batch + Python call + result
     # assembly — a cogroup over the 3.6k-group hot benchmark measured
@@ -570,65 +595,38 @@ def bucketed_topk_join(
         .repartition(*group_keys)
         .sortWithinPartitions(*group_keys)
     )
-    key_cols = list(group_keys)
 
     def segment_scan(batches):
         # numpy-native: each Arrow batch converts to flat arrays ONCE and
         # the group loop runs on array slices — no per-group pandas frames
         # (a pandas-sliced variant measured no better than the cogroup it
         # replaced; the per-group toll had just moved into .iloc)
-        import numpy as np
-        import pandas as pd
+        parts = []
 
         def arrays_of(pdf):
-            keys = np.stack(
-                [pdf[c].to_numpy(dtype=np.int64) for c in key_cols], axis=1
-            )
-            vec = np.stack(
-                [np.asarray(v, dtype=np.int64) for v in pdf["vec"]]
-            ) if len(pdf) else np.empty((0, dim), dtype=np.int64)
             return (
-                keys,
+                np.stack([pdf[c].to_numpy(np.int64) for c in group_keys], axis=1),
                 pdf["is_q"].to_numpy(dtype=bool),
                 pdf["qid"].to_numpy(),
                 pdf["neighbor_id"].to_numpy(),
-                vec,
+                _stack(pdf["vec"], np.int64, dim),
             )
 
-        out_q, out_n, out_s = [], [], []
-
-        def emit(keys, isq, qids, nids, V, s, e):
+        def emit(arrs, s, e):
+            _, isq, qids, nids, V = arrs
             m = isq[s:e]
             if m.all() or not m.any():
                 return  # query-only or corpus-only run: no candidates
-            rel = np.nonzero(~m)[0] + s
-            C = V[rel]
-            nid = nids[rel]
-            perm0 = np.argsort(nid, kind="stable")  # tie-break order
-            C = C[perm0]
-            nid = nid[perm0]
-            n2c = (C * C).sum(axis=1).astype(np.float64)
-            top = min(k, len(nid))
             qrel = np.nonzero(m)[0] + s
-            for lo in range(0, len(qrel), 4096):
-                sel = qrel[lo : lo + 4096]
-                Q = V[sel]
-                q2 = (Q * Q).sum(axis=1).astype(np.float64)
-                dots = (Q @ C.T).astype(np.float64)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    S = np.where(
-                        (q2[:, None] > 0) & (n2c[None, :] > 0),
-                        dots / (np.sqrt(q2)[:, None] * np.sqrt(n2c)[None, :]),
-                        0.0,
-                    )
-                # rowwise lexsort(primary -score, secondary neighbor_id):
-                # columns are in nid order, so one stable argsort on
-                # -score preserves the id tie-break
-                order = np.argsort(-S, axis=1, kind="stable")[:, :top]
-                rows = np.arange(S.shape[0])[:, None]
-                out_q.append(np.repeat(qids[sel], top))
-                out_n.append(nid[order].reshape(-1))
-                out_s.append(S[rows, order].reshape(-1))
+            crel = np.nonzero(~m)[0] + s
+            qi, nid, score = _topk(V[qrel], V[crel], nids[crel], k)
+            parts.append((qids[qrel][qi], nid, score))
+
+        def flush():
+            if parts:
+                frame = _partial_frame(parts)
+                parts.clear()
+                yield frame
 
         carry = None
         for pdf in batches:
@@ -636,48 +634,70 @@ def bucketed_topk_join(
                 continue
             arrs = arrays_of(pdf)
             if carry is not None:
-                arrs = tuple(
-                    np.concatenate([c, a]) for c, a in zip(carry, arrs)
-                )
-                carry = None
-            keys, isq, qids, nids, V = arrs
+                arrs = tuple(np.concatenate([c, a]) for c, a in zip(carry, arrs))
+            keys = arrs[0]
             new_grp = np.ones(len(keys), dtype=bool)
             new_grp[1:] = (keys[1:] != keys[:-1]).any(axis=1)
             starts = np.nonzero(new_grp)[0]
             # the last run may continue into the next batch — carry it
             carry = tuple(a[starts[-1] :] for a in arrs)
-            for i in range(len(starts) - 1):
-                emit(keys, isq, qids, nids, V, starts[i], starts[i + 1])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "score": np.concatenate(out_s),
-                    }
-                )
-                out_q.clear(), out_n.clear(), out_s.clear()
-        if carry is not None and len(carry[0]):
-            keys, isq, qids, nids, V = carry
-            emit(keys, isq, qids, nids, V, 0, len(keys))
-        if out_q:
-            yield pd.DataFrame(
-                {
-                    "qid": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "score": np.concatenate(out_s),
-                }
-            )
+            for s, e in zip(starts[:-1], starts[1:]):
+                emit(arrs, s, e)
+            yield from flush()
+        if carry is not None:
+            emit(carry, 0, len(carry[0]))
+        yield from flush()
 
     partial = tagged.mapInPandas(
         segment_scan, f"qid {qid_type}, neighbor_id {id_type}, score double"
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    return _rank_topk(partial, k)
+
+
+def _within_group_pairs(
+    members: DataFrame, group_col: str, id_col: str, expand_salts: int, *carry
+) -> DataFrame:
+    """(a, b, *carry) for every member pair a < b inside each group of
+    ``members``, which carries the group's member count ``cnt``.
+    Output-sized work, salted over min(cnt, expand_salts) reducers per
+    group: the left side is keyed by hash(id) mod the group's salt domain
+    and the right side replicates once per salt, so each unordered pair
+    matches exactly once. Sizing the salt domain by the group's
+    multiplicity keeps the replication factor at cnt for small groups (the
+    common case) while a degenerate 10k-member group still fans out over
+    all ``expand_salts`` reducers. ``carry`` columns ride on the left."""
+    s_g = F.least(F.col("cnt"), F.lit(expand_salts)).cast("long")
+    left = members.select(
+        group_col,
+        F.col(id_col).alias("a"),
+        F.pmod(F.xxhash64(id_col), s_g).cast("int").alias("salt"),
+        *carry,
+    )
+    right = members.select(
+        group_col,
+        F.col(id_col).alias("b"),
+        F.explode(F.sequence(F.lit(0), (s_g - 1).cast("int"))).alias("salt"),
+    )
+    return left.join(right, [group_col, "salt"]).filter(F.col("a") < F.col("b"))
+
+
+def _member_pairs(
+    group_pairs: DataFrame, members: DataFrame, group_col: str, id_col: str, value
+) -> DataFrame:
+    """Multiplicity expansion: each (<group>_a, <group>_b) row of
+    ``group_pairs`` -> (a, b, value) for every pair of their members, with
+    a < b. Output-sized."""
+    ga, gb = f"{group_col}_a", f"{group_col}_b"
+    ma = members.select(F.col(group_col).alias(ga), F.col(id_col).alias("_ma"))
+    mb = members.select(F.col(group_col).alias(gb), F.col(id_col).alias("_mb"))
     return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "neighbor_id")
-        .orderBy("qid", "rank")
+        group_pairs.join(ma, ga)
+        .join(mb, gb)
+        .select(
+            F.least("_ma", "_mb").alias("a"),
+            F.greatest("_ma", "_mb").alias("b"),
+            value,
+        )
     )
 
 
@@ -724,34 +744,17 @@ def ann_near_dup_pairs(
        max_bucket_distinct — same contract as candidate_pairs).
     """
     if dim is None:
-        dim = len(
-            np.asarray(df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()[0])
-        )
+        dim = _vec_dim(df, vec_col)
     planes = quantized_hyperplanes(dim, n_planes, seed)
     # independent second bank for hot-bucket subdivision (splitmix-style
     # seed offset; any fixed distinct seed works — independence from bank 1
     # is what splits vectors that agree on the first n_planes signs)
     planes2 = quantized_hyperplanes(dim, extra_planes, seed + 7919)
 
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import LongType
-
-    @pandas_udf(LongType())
-    def bucket_udf(vecs: pd.Series) -> pd.Series:
-        mq = quantize_vecs(np.array([np.asarray(v, dtype=np.float64) for v in vecs]))
-        signs = (mq @ planes.T) > 0
-        powers = 1 << np.arange(n_planes, dtype=np.int64)
-        return pd.Series(signs.astype(np.int64) @ powers)
-
-    def _qvec(c):
-        return F.transform(
-            c, lambda x: F.floor(x.cast("double") * F.lit(float(QUANT_SCALE))).cast("long")
-        )
-
     side = df.select(
         F.col(id_col).alias("vid"),
-        _qvec(F.col(vec_col)).alias("vq"),
-        F.coalesce(bucket_udf(F.col(vec_col)), F.lit(-1)).alias("bucket"),
+        _qvec(vec_col).alias("vq"),
+        _bucket_col(vec_col, planes).alias("bucket"),
     ).withColumn(
         "n2", F.aggregate("vq", F.lit(0).cast("long"), lambda acc, x: acc + x * x)
     )
@@ -773,35 +776,18 @@ def ann_near_dup_pairs(
 
     # within-group pairs: identical vq, score = the self-score computed
     # with the SAME formula as the pair path (bit-identical to the naive
-    # all-pairs join). Output-sized, salted over min(cnt, expand_salts)
-    # reducers per group (left keyed by hash(vid) mod the group's salt
-    # domain, right replicated once per salt — each unordered pair matches
-    # exactly once).
-    # the self-score is computed ONCE per member row and copied through the
-    # expansion join — evaluating the sqrt/div/round expression per OUTPUT
-    # row instead measured 16.3s vs 3.9s on the 50M-pair degenerate lane
+    # all-pairs join). The self-score is computed ONCE per member row and
+    # copied through the expansion join — evaluating the sqrt/div/round
+    # expression per OUTPUT row instead measured 16.3s vs 3.9s on the
+    # 50M-pair degenerate lane
     multi = members.withColumn(
         "selfscore", F.round(_score(F.col("n2"), F.col("n2"), F.col("n2")), 6)
     ).filter(
         (F.col("cnt") >= 2)
         & (_score(F.col("n2"), F.col("n2"), F.col("n2")) >= min_cosine)
     )
-    s_g = F.least(F.col("cnt"), F.lit(expand_salts)).cast("long")
-    w_left = multi.select(
-        "gid",
-        F.col("vid").alias("a"),
-        F.pmod(F.xxhash64("vid"), s_g).cast("int").alias("salt"),
-        "selfscore",
-    )
-    w_right = multi.select(
-        "gid",
-        F.col("vid").alias("b"),
-        F.explode(F.sequence(F.lit(0), (s_g - 1).cast("int"))).alias("salt"),
-    )
-    within = (
-        w_left.join(w_right, ["gid", "salt"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", F.col("selfscore").alias("cosine"))
+    within = _within_group_pairs(multi, "gid", "vid", expand_salts, "selfscore").select(
+        "a", "b", F.col("selfscore").alias("cosine")
     )
 
     # cross-group candidates over DISTINCT vectors only
@@ -819,19 +805,12 @@ def ann_near_dup_pairs(
         )
     # ONE projection assigns sub for both regimes (round 6: the former
     # small/hot filter+union evaluated the sizes aggregate and the reps
-    # scan twice — When() keeps the expensive sub-bucket expression lazy on
-    # non-hot rows with identical values), and the checkpoint feeds both
-    # sides of the self-join without re-running the join-with-sizes subtree
-    # (it also makes the observed bucket metrics fire exactly once).
+    # scan twice), and the checkpoint feeds both sides of the self-join
+    # without re-running the join-with-sizes subtree (it also makes the
+    # observed bucket metrics fire exactly once).
     rep_side = (
         reps.join(sizes, "bucket")
-        .withColumn(
-            "sub",
-            F.when(
-                F.col("n_distinct") > hot_bucket_cap,
-                F.coalesce(_sign_sub_bucket("vq", planes2), F.lit(0)),
-            ).otherwise(F.lit(0)),
-        )
+        .withColumn("sub", _hot_sub("n_distinct", hot_bucket_cap, "vq", planes2))
         .select("gid", "vq", "bucket", "sub", "n2")
         .localCheckpoint(eager=False)
     )
@@ -857,18 +836,10 @@ def ann_near_dup_pairs(
             "cosine",
         )
     )
-    # multiplicity expansion: every member pair inherits the representative
-    # score exactly (cosine is a function of vq alone). Output-sized.
-    ma = members.select(F.col("gid").alias("gid_a"), F.col("vid").alias("va"))
-    mb = members.select(F.col("gid").alias("gid_b"), F.col("vid").alias("vb"))
-    cross = (
-        rep_pairs.join(ma, "gid_a")
-        .join(mb, "gid_b")
-        .select(
-            F.least("va", "vb").alias("a"),
-            F.greatest("va", "vb").alias("b"),
-            F.round("cosine", 6).alias("cosine"),
-        )
+    # every member pair inherits the representative score exactly (cosine
+    # is a function of vq alone)
+    cross = _member_pairs(
+        rep_pairs, members, "gid", "vid", F.round("cosine", 6).alias("cosine")
     )
     return within.unionByName(cross)
 
@@ -1087,47 +1058,18 @@ def simhash_near_pairs(
         .localCheckpoint(eager=False)
     )  # the sig VALUE is the group identity — no member re-join needed
 
-    # within-group pairs: hamming 0 by construction. Output-sized work —
-    # spread over min(cnt, expand_salts) tasks per group (left side keyed by
-    # hash(key) mod the group's salt domain, right side replicated once per
-    # salt: each unordered pair matches exactly once). Sizing the salt
-    # domain by the GROUP's multiplicity keeps the replication factor at
-    # cnt for small groups (the common case) while a degenerate 10k-member
-    # block still fans out over the full expand_salts reducers.
+    # within-group pairs: hamming 0 by construction, salted over the
+    # group's multiplicity (see _within_group_pairs)
     multi = groups.filter(F.col("cnt") >= 2).select("sig", "cnt")
-    m = sigs.join(multi, "sig")
-    s_g = F.least(F.col("cnt"), F.lit(expand_salts)).cast("long")
-    left = m.select(
-        "sig",
-        F.col("key").alias("a"),
-        F.pmod(F.xxhash64("key"), s_g).cast("int").alias("salt"),
-    )
-    right = m.select(
-        "sig",
-        F.col("key").alias("b"),
-        F.explode(F.sequence(F.lit(0), (s_g - 1).cast("int"))).alias("salt"),
-    )
-    within = (
-        left.join(right, ["sig", "salt"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", F.lit(0).cast("long").alias("hamming"))
-    )
+    within = _within_group_pairs(
+        sigs.join(multi, "sig"), "sig", "key", expand_salts
+    ).select("a", "b", F.lit(0).cast("long").alias("hamming"))
 
     # cross-group pairs over DISTINCT sigs only, then multiplicity expansion
     gpairs = _simhash_group_pairs(
         groups.select("sig"), n_chunks, max_hamming, hot_chunk_cap
     )
-    ma = sigs.select(F.col("sig").alias("sig_a"), F.col("key").alias("ka"))
-    mb = sigs.select(F.col("sig").alias("sig_b"), F.col("key").alias("kb"))
-    cross = (
-        gpairs.join(ma, "sig_a")
-        .join(mb, "sig_b")
-        .select(
-            F.least("ka", "kb").alias("a"),
-            F.greatest("ka", "kb").alias("b"),
-            "hamming",
-        )
-    )
+    cross = _member_pairs(gpairs, sigs, "sig", "key", "hamming")
     return within.unionByName(cross)
 
 
@@ -1166,8 +1108,6 @@ def simhash_dup_flags(
     bands = df.select(key_col, text_col).mapInPandas(
         gen, f"key {key_type}, band_idx int, band_hash long"
     )
-    from rensa_spark.operators.lsh import one_shot_flags_from_bands
-
     return one_shot_flags_from_bands(
         bands,
         keys=df.select(
@@ -1222,7 +1162,7 @@ def ivf_train_centroids(
         raise ValueError(
             f"need >= {n_centroids} non-null vectors to train IVF centroids"
         )
-    x = np.stack([np.asarray(r["vq"], dtype=np.int64) for r in rows])
+    x = _stack([r["vq"] for r in rows], np.int64, len(rows[0]["vq"]))
     cent = x[:n_centroids].copy()
     for _ in range(n_iters):
         # exact: (x-c)^2 summed; |x-c| < 2^22, dim <= 2^9 -> < 2^53
@@ -1288,20 +1228,13 @@ def ivf_topk(
       as ONE vectorized Arrow-batched pandas UDF over the pair — same
       exact int64 math, pinned by test_ivf_topk_high_dim."""
     if dim is None:
-        dim = len(
-            np.asarray(df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()[0])
-        )
-
-    def _qvec(c):
-        return F.transform(
-            c, lambda x: F.floor(x.cast("double") * F.lit(float(QUANT_SCALE))).cast("long")
-        )
+        dim = _vec_dim(df, vec_col)
 
     # ONE materialization feeds the 5 training actions + init + serving
     # (lazy localCheckpoint: blocks reclaimed when the result goes out of
     # scope; without it each Lloyd iteration re-quantizes the whole corpus)
     side = (
-        df.select(F.col(id_col).alias("vid"), _qvec(F.col(vec_col)).alias("vq"))
+        df.select(F.col(id_col).alias("vid"), _qvec(vec_col).alias("vq"))
         .filter(F.col("vq").isNotNull())
         .localCheckpoint(eager=False)
     )
@@ -1311,14 +1244,9 @@ def ivf_topk(
         train_sample = max(train_sample, 30 * n_centroids)
     cent = ivf_train_centroids(side, n_centroids, n_iters, train_sample)
 
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, IntegerType, LongType
-
     @pandas_udf(ArrayType(IntegerType()))
     def probes(vqs: pd.Series) -> pd.Series:
-        if len(vqs) == 0:  # empty Arrow batch: np.stack([]) would raise
-            return pd.Series([], dtype=object)
-        m = np.stack([np.asarray(v, dtype=np.int64) for v in vqs])
+        m = _stack(vqs, np.int64, dim)
         d = ((m[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
         # argsort with centroid-id tiebreak: stable sort on ids then dist
         order = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
@@ -1330,11 +1258,8 @@ def ivf_topk(
         F.col("vq").alias("nvq"),
         F.col("probe").getItem(0).alias("c"),  # home bucket = nearest centroid
     )
+    bucket_metrics = _metrics_name(bucket_metrics, "rensa_ivf_buckets")
     if bucket_metrics is not None:
-        if bucket_metrics == "rensa_ivf_buckets":
-            from rensa_spark.operators.lsh import _METRICS_SEQ
-
-            bucket_metrics = f"rensa_ivf_buckets_{next(_METRICS_SEQ)}"
         sizes = corpus.groupBy("c").agg(
             F.count(F.lit(1)).alias("_bucket_members")
         ).observe(
@@ -1371,11 +1296,7 @@ def ivf_topk(
     else:
         @pandas_udf(LongType())
         def l2sq_udf(qs: pd.Series, ns: pd.Series) -> pd.Series:
-            if len(qs) == 0:
-                return pd.Series([], dtype="int64")
-            qm = np.stack([np.asarray(v, dtype=np.int64) for v in qs])
-            nm = np.stack([np.asarray(v, dtype=np.int64) for v in ns])
-            diff = qm - nm
+            diff = _stack(qs, np.int64, dim) - _stack(ns, np.int64, dim)
             return pd.Series(np.einsum("ij,ij->i", diff, diff))
 
         cand = cand.withColumn("l2sq", l2sq_udf("qvq", "nvq"))

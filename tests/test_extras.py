@@ -1013,6 +1013,42 @@ def test_bucketed_topk_bypass_matches_cogroup(spark, emb_df):
                                   b[["qid", "rank", "neighbor_id"]])
 
 
+def test_bucketed_topk_bypass_branches_equal_scan_rows_and_schema(spark):
+    """Forced-branch equality for the small-input bypass with an int qid.
+    With the default cap the 300-row self-join takes the bypass; with
+    hot_bucket_cap=40 the 4 buckets of ~75 rows are hot, so the bypass must
+    decline (it has no sub-split). Either way the default call returns the
+    same rows AND the same schema as the forced scan path."""
+    from rensa_spark.operators.similarity import bucketed_topk_join
+
+    rng = np.random.default_rng(3)
+    dim = 8
+    pdf = pd.DataFrame(
+        {
+            "vec_id": np.arange(300, dtype=np.int32),
+            "embedding": [v.tolist() for v in rng.normal(size=(300, dim))],
+        }
+    )
+    df = spark.createDataFrame(pdf, "vec_id int, embedding array<float>")
+    for cap, bypass in ((2048, True), (40, False)):
+        kw = dict(k=3, n_planes=2, dim=dim, hot_bucket_cap=cap, extra_planes=4)
+        default = bucketed_topk_join(
+            df, "vec_id", "embedding", df, "vec_id", "embedding", **kw
+        )
+        scan = bucketed_topk_join(
+            df, "vec_id", "embedding", df, "vec_id", "embedding",
+            broadcast_max_rows=0, **kw
+        )
+        # the scan path tags its union with is_q; the bypass has no union
+        took_scan = "is_q" in default._jdf.queryExecution().toString()
+        assert took_scan != bypass, cap
+        assert default.schema == scan.schema, cap
+        assert default.schema["qid"].dataType.simpleString() == "int"
+        a = default.toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
+        b = scan.toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
+        pd.testing.assert_frame_equal(a, b)
+
+
 def test_bucketed_topk_query_salt_bounds_groups(spark):
     """Round-5 verdict ask #1: a skewed query workload (every query
     probing the same bucket) must not land in one unbounded cogroup

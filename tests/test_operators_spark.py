@@ -272,3 +272,35 @@ def test_capped_bucket_observation(spark):
     # capped vs not must agree on the connected keys (star+ring covers all)
     assert pairs.selectExpr("a AS k").union(pairs.selectExpr("b")).distinct().count() == \
         pairs2.selectExpr("a AS k").union(pairs2.selectExpr("b")).distinct().count()
+
+
+def test_candidate_pairs_exact_cap_below_hot_cap(spark):
+    """exact_task_cap below hot_bucket_cap (the dedup_edges defaults:
+    8192 < cfg.hot_bucket_cap): a bucket between the two caps is within
+    hot_bucket_cap, so the full self-join pairs it. It must not also take
+    the hub+ring path, nor count as a heuristic bucket."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from rensa_spark.operators.lsh import candidate_pairs
+
+    keys = [f"k{i:02d}" for i in range(15)]  # one 15-member bucket
+    df = spark.createDataFrame(
+        [(k, [i, i], [42]) for i, k in enumerate(keys)],
+        "key string, sig array<long>, bands array<long>",
+    )
+    obs = Observation("exact_below_hot")
+    pairs = candidate_pairs(
+        df,
+        "key",
+        hot_bucket_cap=20,
+        exact_task_cap=10,
+        sort_keys=df.select("key", F.col("sig").alias("sort_key")),
+        verify_threshold=0.8,
+        capped_metrics=obs,
+    )
+    got = {(r["a"], r["b"]) for r in pairs.collect()}
+    assert got == {(a, b) for i, a in enumerate(keys) for b in keys[i + 1 :]}
+    assert obs.get["heuristic_buckets"] == 0
+    assert obs.get["capped_buckets"] == 0
+    assert obs.get["max_bucket_size"] == 15
