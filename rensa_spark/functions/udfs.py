@@ -32,7 +32,7 @@ from rensa_spark.config import RensaConfig
 from rensa_spark.kernels.cminhash import cminhash_digest32, cminhash_matrix64
 from rensa_spark.kernels.fxhash import band_hash_u64, fxhash64
 from rensa_spark.kernels.rho import rho_matrix
-from rensa_spark.kernels.rminhash import rminhash_matrix
+from rensa_spark.kernels.rminhash import jaccard_matrix, rminhash_matrix
 from rensa_spark.kernels.shingle import shingle_hashes_batch
 
 _PERM_CACHE: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
@@ -263,6 +263,6 @@ def jaccard_udf(cfg: RensaConfig):
     def _udf(sig_a: pd.Series, sig_b: pd.Series) -> pd.Series:
         a = _sig_matrix_from_series(sig_a, cfg.num_perm)
         b = _sig_matrix_from_series(sig_b, cfg.num_perm)
-        return pd.Series((a == b).mean(axis=1))
+        return pd.Series(jaccard_matrix(a, b))
 
     return _udf

@@ -22,7 +22,10 @@ from rensa_spark.functions.udfs import (
     rminhash_sig_bands_udf,
 )
 from rensa_spark.operators.cc import connected_components, survivors
-from rensa_spark.operators.lsh import candidate_pairs
+from rensa_spark.operators.lsh import candidate_pairs, explode_bands
+
+# add_if_unique decides on the driver up to this many verified conflict edges
+DRIVER_MAX_EDGES = 200_000
 
 
 def sketch_rminhash(
@@ -41,6 +44,17 @@ def sketch_rminhash(
         .withColumn("sig", F.col("_sb.sig"))
         .drop("_sb")
     )
+
+
+def sketch_band_rows(base: DataFrame, cfg: RensaConfig) -> tuple[DataFrame, DataFrame]:
+    """(key, text) -> ((key, sig, bands), (key, band_idx, band_hash)) from
+    one sketch pass, checkpointed lazily because both outputs read it."""
+    sk = (
+        sketch_rminhash(base, cfg, "key", "text")
+        .select("key", "sig", "bands")
+        .localCheckpoint(eager=False)
+    )
+    return sk, explode_bands(sk, "key")
 
 
 def sketch_rho(df: DataFrame, cfg: RensaConfig, key_col: str, text_col: str) -> DataFrame:
@@ -63,6 +77,43 @@ def dup_flags(df: DataFrame, cfg: RensaConfig, key_col: str, text_col: str) -> D
             F.col(key_col).alias("key"), F.lit(cfg.num_bands).alias("n_bands")
         ),
     )
+
+
+def _verify_pairs(
+    pairs: DataFrame, sigs_a: DataFrame, sigs_b: DataFrame, cfg: RensaConfig
+) -> DataFrame:
+    """Candidate (a, b) pairs -> (a, b, sim) kept iff the equal-slot
+    jaccard of a's signature (from ``sigs_a``) and b's (from ``sigs_b``),
+    both (key, sig) tables, is >= ``cfg.threshold``
+    (src/inline_dedup/rminhash.rs:233-299, 321-360)."""
+    jac = jaccard_udf(cfg)
+    return (
+        pairs.join(sigs_a.withColumnRenamed("key", "a").withColumnRenamed("sig", "sig_a"), "a")
+        .join(sigs_b.withColumnRenamed("key", "b").withColumnRenamed("sig", "sig_b"), "b")
+        .withColumn("sim", jac("sig_a", "sig_b"))
+        .select("a", "b", "sim")
+        .filter(F.col("sim") >= cfg.threshold)
+    )
+
+
+def probe_stored(
+    bands: DataFrame,
+    sigs: DataFrame,
+    stored_bands: DataFrame,
+    stored_sigs: DataFrame,
+    cfg: RensaConfig,
+) -> DataFrame:
+    """Verified hits of new rows against a stored index (is_duplicate /
+    get_duplicates, src/inline_dedup/rminhash.rs:321-360): band rows
+    (key, band_idx, band_hash) meet the stored band rows, each distinct
+    (key, stored key) candidate is verified against the stored signature.
+    -> (a = key, b = stored key, sim)."""
+    cand = (
+        bands.join(stored_bands.withColumnRenamed("key", "b"), ["band_idx", "band_hash"])
+        .select(F.col("key").alias("a"), "b")
+        .distinct()
+    )
+    return _verify_pairs(cand, sigs, stored_sigs, cfg)
 
 
 def verified_pairs(
@@ -90,14 +141,7 @@ def verified_pairs(
         capped_metrics=capped_metrics,
     )
     sigs = sketched.select(F.col(key_col).alias("key"), "sig")
-    jac = jaccard_udf(cfg)
-    return (
-        pairs.join(sigs.withColumnRenamed("key", "a").withColumnRenamed("sig", "sig_a"), "a")
-        .join(sigs.withColumnRenamed("key", "b").withColumnRenamed("sig", "sig_b"), "b")
-        .withColumn("sim", jac("sig_a", "sig_b"))
-        .select("a", "b", "sim")
-        .filter(F.col("sim") >= cfg.threshold)
-    )
+    return _verify_pairs(pairs, sigs, sigs, cfg)
 
 
 def dedup_edges(
@@ -170,17 +214,11 @@ def multimodal_dedup_clusters(
     - caption near-duplicates: verified MinHash pairs,
     clustered together by connected components; survivor = min key.
     The hot path touches only (key, caption, phash) — never image bytes."""
-    base = df.select(
-        F.col(key_col).alias("key"),
-        F.col(caption_col).alias("text"),
-        F.col(phash_col).alias("phash"),
-    )
     # no persist (round 6): dedup_edges consumes the sketch exactly once
     # via its checkpointed identical-sig window
-    sk = sketch_rminhash(base, cfg, "key", "text")
-    edges = multimodal_dedup_edges(df, cfg, key_col, caption_col, phash_col, _sk=sk)
+    edges = multimodal_dedup_edges(df, cfg, key_col, caption_col, phash_col)
     clusters = connected_components(edges)  # eager: materializes edges
-    return survivors(clusters, base.select("key"))
+    return survivors(clusters, df.select(F.col(key_col).alias("key")))
 
 
 def multimodal_dedup_edges(
@@ -189,7 +227,6 @@ def multimodal_dedup_edges(
     key_col: str = "image_id",
     caption_col: str = "caption",
     phash_col: str = "phash",
-    _sk: DataFrame | None = None,
 ) -> DataFrame:
     """The LAZY duplicate-edge set of :func:`multimodal_dedup_clusters`
     (equal-phash ∪ verified caption pairs) — exposed so the plan-shape test
@@ -199,8 +236,7 @@ def multimodal_dedup_edges(
         F.col(caption_col).alias("text"),
         F.col(phash_col).alias("phash"),
     )
-    sk = _sk if _sk is not None else sketch_rminhash(base, cfg, "key", "text")
-    caption_edges = dedup_edges(sk, cfg)
+    caption_edges = dedup_edges(sketch_rminhash(base, cfg, "key", "text"), cfg)
     phash_reps = base.groupBy("phash").agg(F.min("key").alias("rep"))
     phash_edges = (
         base.join(phash_reps, "phash")
@@ -219,7 +255,7 @@ def add_if_unique(
     max_rounds: int = 30,
     use_lsh: bool = True,
     brute_force_max_rows: int = 100_000,
-    driver_max_edges: int | None = None,
+    driver_max_edges: int = DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """Batch emulation of RMinHashDeduplicator.add_pairs with use_lsh=True
     (src/inline_dedup/rminhash.rs:233-299): process rows in ``order_col``
@@ -236,14 +272,14 @@ def add_if_unique(
     (SURVEY.md §7 hard part 2), so rounds ~= chain length.
 
     Round 6: when the verified conflict-edge set is small
-    (``driver_max_edges``, env RENSA_AIU_DRIVER_MAX_EDGES, default
-    200_000 — a few MB collected), the greedy recursion kept(v) =
+    (``driver_max_edges``, default ``DRIVER_MAX_EDGES`` = 200_000 — a few
+    MB collected), the greedy recursion kept(v) =
     not any(kept(u) for u -> v) is evaluated directly on the driver in
     topological order and broadcast-joined back: the edge set is already
     materialized (and counted) for the frontier loop, so the small case
     replaces rounds of checkpoint+count jobs with one tiny collect. The
-    frontier loop remains the scale path, bit-equal by construction
-    (pinned by test_add_if_unique_driver_greedy_matches_loop).
+    frontier loop remains the scale path, bit-equal by construction, with
+    the same schema (pinned by test_add_if_unique_driver_greedy_matches_loop).
 
     Spark jobs run while the result is BUILT, not when it executes: with
     ``use_lsh=False`` one ``count()`` of the input; then an eager
@@ -257,32 +293,14 @@ def add_if_unique(
 
     Returns (key, kept boolean).
     """
-    import os
-
-    if driver_max_edges is None:
-        driver_max_edges = int(os.environ.get("RENSA_AIU_DRIVER_MAX_EDGES", "200000"))
     order_col = order_col or key_col
     base = df.select(
         F.col(key_col).alias("key"),
         F.col(order_col).alias("ord"),
         F.col(text_col).alias("text"),
     )
-    # the fused sketch is consumed up to 4x by verified_pairs (band rows,
-    # mid-path sort keys, both signature join sides) — checkpoint it once
-    # (round 6: each consumer used to re-run the shingle+MinHash UDFs)
-    sk = (
-        sketch_rminhash(base, cfg, "key", "text")
-        .select("key", "sig", "bands")
-        .localCheckpoint(eager=False)
-    )
-    if use_lsh:
-        pairs = verified_pairs(sk, cfg)  # a < b by key; re-orient by ord
-    else:
-        # CMinHashDeduplicator semantics: brute-force against ALL kept items
-        # (src/inline_dedup/cminhash.rs:165-242 — no LSH index). Cross-join
-        # of signatures; only viable for small kept sets, kept for API
-        # parity. jaccard >= threshold is the only gate. Guarded: the O(n^2)
-        # join must never ship at scale by accident.
+    if not use_lsh:
+        # the O(n^2) cross join must never ship at scale by accident
         n_rows = base.count()
         if n_rows > brute_force_max_rows:
             raise ValueError(
@@ -292,6 +310,31 @@ def add_if_unique(
                 f"{brute_force_max_rows}. Use use_lsh=True (the banded-LSH "
                 f"path) at scale, or raise brute_force_max_rows explicitly."
             )
+    return _add_if_unique(
+        sketch_rminhash(base, cfg, "key", "text"), cfg, max_rounds, use_lsh, driver_max_edges
+    )
+
+
+def _add_if_unique(
+    sketched: DataFrame,
+    cfg: RensaConfig,
+    max_rounds: int = 30,
+    use_lsh: bool = True,
+    driver_max_edges: int = DRIVER_MAX_EDGES,
+) -> DataFrame:
+    """:func:`add_if_unique` over rows already sketched to
+    (key, ord, sig, bands)."""
+    # the sketch is consumed up to 5x (band rows, mid-path sort keys, both
+    # signature join sides, the order join) — checkpoint it once (round 6:
+    # each consumer used to re-run the shingle+MinHash UDFs)
+    sk = sketched.select("key", "ord", "sig", "bands").localCheckpoint(eager=False)
+    if use_lsh:
+        pairs = verified_pairs(sk, cfg)  # a < b by key; re-orient by ord
+    else:
+        # CMinHashDeduplicator semantics: brute-force against ALL kept items
+        # (src/inline_dedup/cminhash.rs:165-242 — no LSH index). Cross-join
+        # of signatures; only viable for small kept sets, kept for API
+        # parity. jaccard >= threshold is the only gate.
         jac = jaccard_udf(cfg)
         left = sk.select(F.col("key").alias("a"), F.col("sig").alias("sig_a"))
         right = sk.select(F.col("key").alias("b"), F.col("sig").alias("sig_b"))
@@ -301,7 +344,7 @@ def add_if_unique(
             .filter(F.col("sim") >= cfg.threshold)
             .select("a", "b", "sim")
         )
-    ords = base.select("key", "ord")
+    ords = sk.select("key", "ord")
     edges = (
         pairs.join(ords.withColumnRenamed("key", "a").withColumnRenamed("ord", "ord_a"), "a")
         .join(ords.withColumnRenamed("key", "b").withColumnRenamed("ord", "ord_b"), "b")
@@ -339,8 +382,8 @@ def add_if_unique(
                 if indeg[w] == 0:
                     dq.append(w)
         if seen == len(nodes):  # acyclic (always, by ord orientation)
-            spark = df.sparkSession
-            key_field = base.select("key").schema.fields[0]
+            spark = sk.sparkSession
+            key_field = sk.schema["key"]
             decided = spark.createDataFrame(
                 [(k, bool(v)) for k, v in kept.items()],
                 StructType(
@@ -351,7 +394,7 @@ def add_if_unique(
                 ),
             )
             return (
-                base.select("key")
+                sk.select("key")
                 .join(F.broadcast(decided), "key", "left")
                 .select("key", F.coalesce("kept_d", F.lit(True)).alias("kept"))
             )
@@ -367,7 +410,7 @@ def add_if_unique(
     # kept iff no earlier KEPT neighbor reaches it. Keys are unique, so
     # every set op is a key-join; a non-empty DAG always has a non-empty
     # frontier, so the loop cannot stall.
-    state = base.select(
+    state = sk.select(
         "key", F.lit(None).cast("boolean").alias("kept")
     ).localCheckpoint(eager=True)
     n_undecided = state.filter(F.col("kept").isNull()).count()
@@ -408,7 +451,9 @@ def add_if_unique(
             f"add_if_unique did not converge in {max_rounds} rounds; "
             "conflict chains longer than expected"
         )
-    return state.select("key", "kept")
+    # every key is decided here; the coalesce only makes ``kept``
+    # non-nullable, the driver branch's schema
+    return state.select("key", F.coalesce("kept", F.lit(True)).alias("kept"))
 
 
 def exact_dup_flags(

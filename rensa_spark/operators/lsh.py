@@ -346,47 +346,29 @@ def candidate_pairs(
     key_col: str,
     bands_col: str = "bands",
     hot_bucket_cap: int = 4096,
-    sort_keys: DataFrame | None = None,
+    *,
+    sort_keys: DataFrame,
+    verify_threshold: float,
     capped_metrics="rensa_capped_buckets",
-    verify_threshold: float | None = None,
     exact_task_cap: int = 8192,
 ) -> DataFrame:
-    """Array-column wrapper over :func:`candidate_pairs_from_band_rows`."""
-    return candidate_pairs_from_band_rows(
-        explode_bands(df, key_col, bands_col),
-        hot_bucket_cap,
-        sort_keys,
-        capped_metrics=capped_metrics,
-        verify_threshold=verify_threshold,
-        exact_task_cap=exact_task_cap,
-    )
-
-
-def candidate_pairs_from_band_rows(
-    bands: DataFrame,
-    hot_bucket_cap: int = 4096,
-    sort_keys: DataFrame | None = None,
-    capped_metrics="rensa_capped_buckets",
-    verify_threshold: float | None = None,
-    exact_task_cap: int = 8192,
-) -> DataFrame:
-    """Distinct candidate pairs (a < b) sharing >=1 band bucket, from
-    (key, band_idx, band_hash) rows.
+    """Distinct candidate pairs (a < b) of ``key_col`` values sharing >=1
+    band bucket, from rows carrying a ``bands_col`` array of band hashes.
+    ``sort_keys`` is (key, sort_key) with the signature as ``sort_key``.
 
     Buckets larger than ``hot_bucket_cap`` would emit O(n^2) pairs through
     the bucket self-join; they take one of two bounded paths instead:
 
-    - MID buckets (cap < size <= ``exact_task_cap``), when ``sort_keys``
-      carries the signature AND ``verify_threshold`` is given (round-3
-      verdict ask #5): the bucket's members + signatures are grouped into
-      ONE applyInPandas task that computes the EXACT pairwise
-      equal-slot-fraction >= threshold decision vectorized (slot-chunked
-      numpy, ~n^2*num_perm byte-ops per bucket) and emits only the
-      verified pairs — the true answer for that bucket, never the O(n^2)
-      candidate multiset through a shuffle. Downstream verification
-      re-checks and keeps all of them, so capped results are EXACTLY the
-      uncapped results for every bucket up to exact_task_cap — including
-      adversarial non-chain families (pinned by
+    - MID buckets (cap < size <= ``exact_task_cap``, round-3 verdict ask
+      #5): the bucket's members + signatures are grouped into ONE
+      applyInPandas task that computes the EXACT pairwise
+      equal-slot-fraction >= ``verify_threshold`` decision vectorized
+      (row-chunked ``equal_slot_counts``, ~n^2*num_perm byte-ops per
+      bucket) and emits only the verified pairs — the true answer for that
+      bucket, never the O(n^2) candidate multiset through a shuffle.
+      Downstream verification re-checks and keeps all of them, so capped
+      results are EXACTLY the uncapped results for every bucket up to
+      exact_task_cap — including adversarial non-chain families (pinned by
       test_hot_bucket_exact_midpath_matches_uncapped).
     - HUGE buckets (> max(hot_bucket_cap, exact_task_cap) — at the
       lsh defaults, >8192 DISTINCT members sharing one band hash; a bucket
@@ -398,8 +380,6 @@ def candidate_pairs_from_band_rows(
       similarity is transitive along the signature order — the caveat
       applies ONLY beyond both caps, and entering it is observable
       (heuristic_buckets).
-      Without ``sort_keys``/``verify_threshold`` mid buckets fall back to
-      this path too (legacy behavior).
 
     The reference never materializes pairs at all for flags (flags need
     only bucket size >= 2); pairs exist here for the verification +
@@ -416,13 +396,11 @@ def candidate_pairs_from_band_rows(
     per call (``rensa_capped_buckets_<n>``) so composing several pair
     operators in one plan never collides on observed-metric names.
     """
-    exact_mid = sort_keys is not None and verify_threshold is not None
+    bands = explode_bands(df, key_col, bands_col)
     # buckets above this take the hub+ring path. The self-join serves every
     # bucket up to hot_bucket_cap, so the heuristic never starts below it,
     # even when exact_task_cap is the smaller cap
-    heuristic_cap = hot_bucket_cap
-    if exact_mid:
-        heuristic_cap = max(hot_bucket_cap, exact_task_cap)
+    heuristic_cap = max(hot_bucket_cap, exact_task_cap)
     capped_metrics = _metrics_name(capped_metrics, "rensa_capped_buckets")
     sizes = bands.groupBy("band_idx", "band_hash").agg(
         F.count(F.lit(1)).alias("bucket_size")
@@ -450,56 +428,50 @@ def candidate_pairs_from_band_rows(
     )
     key_type = bands.schema["key"].dataType.simpleString()
 
-    if exact_mid:
-        mid = bands_sized.filter(
-            (F.col("bucket_size") > hot_bucket_cap)
-            & (F.col("bucket_size") <= exact_task_cap)
-        )
-        mid_m = mid.select("band_idx", "band_hash", "key").join(
-            sort_keys.select("key", "sort_key"), "key"
-        )
-        thr = float(verify_threshold)
+    mid = bands_sized.filter(
+        (F.col("bucket_size") > hot_bucket_cap)
+        & (F.col("bucket_size") <= exact_task_cap)
+    )
+    mid_m = mid.select("band_idx", "band_hash", "key").join(
+        sort_keys.select("key", "sort_key"), "key"
+    )
+    thr = float(verify_threshold)
 
-        def bucket_verify(pdf):
-            import numpy as np
-            import pandas as pd
+    def bucket_verify(pdf):
+        import numpy as np
+        import pandas as pd
 
-            sig = np.stack([np.asarray(s, dtype=np.int64) for s in pdf["sort_key"]])
-            keys = pdf["key"].values
-            n, p = sig.shape
-            need = int(np.ceil(thr * p - 1e-9))
-            a_parts, b_parts = [], []
-            # slot-chunked pairwise equal counts: row-chunk x all-rows,
-            # accumulated per signature slot — peak memory chunk*n bytes
-            chunk = max(1, min(n, (1 << 22) // max(n, 1)))
-            for lo in range(0, n, chunk):
-                hi = min(n, lo + chunk)
-                eq = np.zeros((hi - lo, n), dtype=np.int32)
-                for s in range(p):
-                    eq += sig[lo:hi, s, None] == sig[None, :, s]
-                ii, jj = np.nonzero(eq >= need)
-                keep = (lo + ii) < jj  # upper triangle by row index
-                # vectorized pair assembly (round-4 advice: a dense
-                # near-dup bucket emits millions of pairs — no per-pair
-                # Python loop): fancy-index the keys, order each pair
-                # with an elementwise where-swap
-                ka = keys[ii[keep] + lo]
-                kb = keys[jj[keep]]
-                sw = kb < ka
-                a_parts.append(np.where(sw, kb, ka))
-                b_parts.append(np.where(sw, ka, kb))
-            return pd.DataFrame(
-                {
-                    "a": np.concatenate(a_parts) if a_parts else [],
-                    "b": np.concatenate(b_parts) if b_parts else [],
-                }
-            )
+        from rensa_spark.kernels.rminhash import equal_slot_counts, equal_slot_need
 
-        mid_pairs = mid_m.groupBy("band_idx", "band_hash").applyInPandas(
-            bucket_verify, f"a {key_type}, b {key_type}"
+        sig = np.stack([np.asarray(s, dtype=np.int64) for s in pdf["sort_key"]])
+        keys = pdf["key"].values
+        n, p = sig.shape
+        need = equal_slot_need(thr, p)
+        a_parts, b_parts = [], []
+        # row-chunk x all-rows counts: peak temporary chunk*n*p <= ~16 MB
+        chunk = max(1, (1 << 24) // max(n * p, 1))
+        for lo in range(0, n, chunk):
+            ii, jj = np.nonzero(equal_slot_counts(sig[lo : lo + chunk], sig) >= need)
+            keep = (lo + ii) < jj  # upper triangle by row index
+            # vectorized pair assembly (round-4 advice: a dense
+            # near-dup bucket emits millions of pairs — no per-pair
+            # Python loop): fancy-index the keys, order each pair
+            # with an elementwise where-swap
+            ka = keys[ii[keep] + lo]
+            kb = keys[jj[keep]]
+            sw = kb < ka
+            a_parts.append(np.where(sw, kb, ka))
+            b_parts.append(np.where(sw, ka, kb))
+        return pd.DataFrame(
+            {
+                "a": np.concatenate(a_parts) if a_parts else [],
+                "b": np.concatenate(b_parts) if b_parts else [],
+            }
         )
-    else:
-        mid_pairs = None
+
+    mid_pairs = mid_m.groupBy("band_idx", "band_hash").applyInPandas(
+        bucket_verify, f"a {key_type}, b {key_type}"
+    )
     big = bands_sized.filter(F.col("bucket_size") > heuristic_cap)
 
     hubs = big.groupBy("band_idx", "band_hash").agg(F.min("key").alias("hub"))
@@ -508,15 +480,10 @@ def candidate_pairs_from_band_rows(
         .filter(F.col("key") != F.col("hub"))
         .select(F.col("hub").alias("a"), F.col("key").alias("b"))
     )
-    if sort_keys is not None:
-        big_sorted = big.select("band_idx", "band_hash", "key").join(
-            sort_keys.select("key", "sort_key"), "key"
-        )
-        order = [F.col("sort_key"), F.col("key")]
-    else:
-        big_sorted = big.select("band_idx", "band_hash", "key")
-        order = [F.col("key")]
-    w = Window.partitionBy("band_idx", "band_hash").orderBy(*order)
+    big_sorted = big.select("band_idx", "band_hash", "key").join(
+        sort_keys.select("key", "sort_key"), "key"
+    )
+    w = Window.partitionBy("band_idx", "band_hash").orderBy("sort_key", "key")
     ring_pairs = (
         big_sorted.withColumn("prev", F.lag("key").over(w))
         .filter(F.col("prev").isNotNull() & (F.col("prev") != F.col("key")))
@@ -525,11 +492,10 @@ def candidate_pairs_from_band_rows(
             F.greatest("prev", "key").alias("b"),
         )
     )
-    out = (
+    return (
         small_pairs.select("a", "b")
         .unionByName(big_pairs.select("a", "b"))
         .unionByName(ring_pairs)
+        .unionByName(mid_pairs)
+        .distinct()
     )
-    if mid_pairs is not None:
-        out = out.unionByName(mid_pairs)
-    return out.distinct()

@@ -180,15 +180,6 @@ class LshIndex:
             "overwrite"
         ).parquet(self._path(name))
 
-    def _sketch(self, base: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """(key, text) -> ((key, sig), (key, band_idx, band_hash)) from one
-        sketch pass, checkpointed lazily because both outputs read it."""
-        from rensa_spark.operators.dedup import sketch_rminhash
-        from rensa_spark.operators.lsh import explode_bands
-
-        sk = sketch_rminhash(base, self.cfg, "key", "text").localCheckpoint(eager=False)
-        return sk.select("key", "sig"), explode_bands(sk, "key")
-
     def insert(self, df: DataFrame, cfg_key: str = "key", text_col: str = "text") -> None:
         """Sketch + band rows appended to the index (insert_matrix,
         src/lsh/py.rs:94-108), plus the signature table that backs
@@ -196,8 +187,11 @@ class LshIndex:
         src/lsh/index.rs:145-165) via tombstone + append at one new
         generation — existing row files are never rewritten."""
         self._require_sigs_consistent()
+        from rensa_spark.operators.dedup import sketch_band_rows
+
         base = df.select(F.col(cfg_key).alias("key"), F.col(text_col).alias("text"))
-        new_sigs, new_bands = self._sketch(base)
+        new_sk, new_bands = sketch_band_rows(base, self.cfg)
+        new_sigs = new_sk.select("key", "sig")
         existed = self._exists()
         if existed:
             self._migrate_if_legacy()
@@ -302,27 +296,14 @@ class LshIndex:
         not enough — each candidate's stored signature is checked against
         the query signature with the equal-slot-fraction jaccard."""
         self._require_sigs_consistent()
-        from rensa_spark.functions.udfs import jaccard_udf
+        from rensa_spark.operators.dedup import probe_stored, sketch_band_rows
 
         base = df.select(F.col(key_col).alias("key"), F.col(text_col).alias("text"))
-        qsigs, qbands = self._sketch(base)
-        qsigs = qsigs.withColumnRenamed("sig", "qsig")
-        cand = (
-            qbands.join(
-                self.bands().withColumnRenamed("key", "index_key"),
-                ["band_idx", "band_hash"],
-            )
-            .select("key", "index_key")
-            .distinct()
-        )
-        jac = jaccard_udf(self.cfg)
+        qsk, qbands = sketch_band_rows(base, self.cfg)
         verified = (
-            cand.join(qsigs, "key")
-            .join(self.sigs().withColumnRenamed("key", "index_key"), "index_key")
-            .withColumn("sim", jac("qsig", "sig"))
-            .filter(F.col("sim") >= self.cfg.threshold)
-            .groupBy("key")
-            .agg(F.sort_array(F.collect_set("index_key")).alias("duplicates"))
+            probe_stored(qbands, qsk.select("key", "sig"), self.bands(), self.sigs(), self.cfg)
+            .groupBy(F.col("a").alias("key"))
+            .agg(F.sort_array(F.collect_set("b")).alias("duplicates"))
         )
         return (
             df.select(F.col(key_col).alias("key"))

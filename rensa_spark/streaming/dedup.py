@@ -57,74 +57,33 @@ class StreamingDeduplicator:
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """foreachBatch hook: decides kept/dup for the batch, appends the
         batch's kept rows to state, and appends decisions to `decisions`."""
-        from rensa_spark.functions.udfs import jaccard_udf, rminhash_sig_bands_udf
-        from rensa_spark.operators.dedup import add_if_unique
+        from rensa_spark.operators.dedup import _add_if_unique, probe_stored, sketch_band_rows
 
-        cfg = self.cfg
         src = batch_df.select(
             F.col(self.key_col).alias("key"), F.col(self.text_col).alias("text")
         ).localCheckpoint(eager=True)
-
-        # ONE fused sketch pass (round 6): the separate sig UDF +
-        # band-row UDF each re-ran the full shingle+MinHash per batch row;
-        # sig and band hashes are one computation, and the checkpoint
-        # feeds all four consumers (state probe + within-batch + both
-        # state appends) without re-crossing Python
-        sb = rminhash_sig_bands_udf(cfg)
-        sk = (
-            src.withColumn("_sb", sb("text"))
-            .select(
-                "key",
-                F.col("_sb.sig").alias("sig"),
-                F.col("_sb.bands").alias("bands"),
-            )
-            .localCheckpoint(eager=False)
-        )
+        # ONE sketch pass per batch row: the checkpointed sketch feeds the
+        # state probe, the within-batch add-if-unique and both state appends
+        sk, bands = sketch_band_rows(src, self.cfg)
         sigs = sk.select("key", "sig")
-        bands = sk.select(
-            "key", F.posexplode("bands").alias("band_idx", "band_hash")
-        )
 
         # 1) duplicates against the existing kept state (LSH candidates ->
-        #    jaccard verify), matching is_duplicate(key, mh) semantics
+        #    jaccard verify), matching is_duplicate(key, mh) semantics; keys
+        #    already present in state are duplicates too
+        survivors = sk
         if self._has_state():
             kept_sigs = self.kept()
             kept_bands = self.spark.read.parquet(self._state_path("kept_bands"))
-            cand = (
-                bands.join(
-                    kept_bands.withColumnRenamed("key", "kept_key"),
-                    ["band_idx", "band_hash"],
-                )
-                .select("key", "kept_key")
-                .distinct()
-            )
-            jac = jaccard_udf(cfg)
-            dup_vs_state = (
-                cand.join(sigs, "key")
-                .join(
-                    kept_sigs.withColumnRenamed("key", "kept_key").withColumnRenamed(
-                        "sig", "kept_sig"
-                    ),
-                    "kept_key",
-                )
-                .withColumn("sim", jac("sig", "kept_sig"))
-                .filter(F.col("sim") >= cfg.threshold)
-                .select("key")
-                .distinct()
-            )
-            dup_keys_vs_state = dup_vs_state
-            # keys already present in state are duplicates too
+            dup_vs_state = probe_stored(bands, sigs, kept_bands, kept_sigs, self.cfg)
             existing = src.join(kept_sigs, "key", "leftsemi").select("key")
-            dup_keys_vs_state = dup_keys_vs_state.unionByName(existing).distinct()
-        else:
-            dup_keys_vs_state = src.select("key").limit(0)
-
-        survivors_candidates = src.join(dup_keys_vs_state, "key", "left_anti")
+            survivors = sk.join(
+                dup_vs_state.select(F.col("a").alias("key")).unionByName(existing),
+                "key",
+                "left_anti",
+            )
 
         # 2) within-batch sequential add-if-unique over the remaining rows
-        decisions = add_if_unique(
-            survivors_candidates, cfg, "key", "text", order_col="key"
-        )
+        decisions = _add_if_unique(survivors.withColumn("ord", F.col("key")), self.cfg)
         kept_new_keys = decisions.filter("kept").select("key")
 
         kept_new_sigs = sigs.join(kept_new_keys, "key", "leftsemi")
@@ -274,6 +233,8 @@ def band_state_flag_rows(
         import numpy as np
         import pandas as pd
 
+        from rensa_spark.kernels.rminhash import equal_slot_counts, equal_slot_need
+
         if state.exists:
             keys_st, flat_st = state.get
             keys_st = list(keys_st)
@@ -294,20 +255,18 @@ def band_state_flag_rows(
         n = arr.shape[0]
         m = sigs_st.shape[0]
         full = np.concatenate([sigs_st, arr], axis=0)
-        need = int(np.ceil(thr * num_perm - 1e-9))
+        need = equal_slot_need(thr, num_perm)
         cols = np.arange(m + n)
         out_conf = np.empty(n, dtype=bool)
         chunk = max(1, (1 << 26) // max((m + n) * num_perm, 1))
         for lo in range(0, n, chunk):
             hi = min(n, lo + chunk)
-            eq = (arr[lo:hi, None, :] == full[None, :, :]).sum(
-                axis=2, dtype=np.int32
-            )
+            eq = equal_slot_counts(arr[lo:hi], full)
             mask = cols[None, :] < (np.arange(lo, hi)[:, None] + m)
             out_conf[lo:hi] = ((eq >= need) & mask).any(axis=1)
         out_conf = list(out_conf)
         new_keys = keys_st + list(pdf["key"])
-        new_sigs = np.concatenate([sigs_st, arr], axis=0)
+        new_sigs = full
         if max_members_per_bucket is not None and len(new_keys) > max_members_per_bucket:
             # oldest-first retention: earliest members are the candidate
             # anchors (reference row-order cap analogue) — keep the HEAD

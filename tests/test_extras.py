@@ -838,6 +838,44 @@ def test_streaming_dedup_matches_sequential(spark, tmp_path):
     assert not mismatches, mismatches[:10]
 
 
+def test_streaming_process_batch_sketches_each_row_once(spark, tmp_path, monkeypatch):
+    """process_batch runs the sketch UDF over each batch row exactly once,
+    with and without kept state: the state probe, the within-batch
+    add-if-unique and both state appends read one sketch. Sketching the
+    surviving rows again would count them twice."""
+    from pyspark.sql.pandas.functions import pandas_udf
+
+    import rensa_spark.functions.udfs as udfs
+    import rensa_spark.operators.dedup as dedup_ops
+    from rensa_spark.streaming.dedup import StreamingDeduplicator
+
+    sketched = spark.sparkContext.accumulator(0)
+    real = udfs.rminhash_sig_bands_udf
+
+    def counting(cfg, *args, **kwargs):
+        inner = real(cfg, *args, **kwargs).func
+
+        @pandas_udf(udfs.SIG_BANDS_SCHEMA)
+        def _udf(col: pd.Series) -> pd.DataFrame:
+            sketched.add(len(col))
+            return inner(col)
+
+        return _udf
+
+    monkeypatch.setattr(udfs, "rminhash_sig_bands_udf", counting)
+    monkeypatch.setattr(dedup_ops, "rminhash_sig_bands_udf", counting)
+
+    pdf = generate_corpus(200, seed=42, with_images=False)[["image_id", "caption"]]
+    pdf = pdf.rename(columns={"image_id": "key", "caption": "text"})
+    dedup = StreamingDeduplicator(spark, CFG, str(tmp_path / "stream"))
+    for epoch, (lo, hi) in enumerate([(0, 100), (100, 200)]):
+        before = sketched.value
+        dedup.process_batch(spark.createDataFrame(pdf.iloc[lo:hi]), epoch)
+        assert sketched.value - before == hi - lo, epoch
+    kept = spark.read.parquet(str(tmp_path / "stream" / "decisions")).filter("kept")
+    assert 0 < kept.count() < 200  # the corpus has duplicates to drop
+
+
 # ------------------------------------------------------------------ substring
 def test_substring_overlap_pairs(spark):
     from rensa_spark.operators.substring import substring_overlap_pairs
@@ -1797,11 +1835,12 @@ def test_hot_bucket_exact_midpath_matches_uncapped(spark):
     # exact mid path available, heuristic_buckets counts only buckets past
     # exact_task_cap (none here), while capped_buckets still reports the
     # mid bucket
-    from rensa_spark.operators.lsh import candidate_pairs_from_band_rows, explode_bands
+    from rensa_spark.operators.lsh import candidate_pairs
 
     obs = Observation("midpath")
-    candidate_pairs_from_band_rows(
-        explode_bands(sketched, "key"),
+    candidate_pairs(
+        sketched,
+        "key",
         hot_bucket_cap=2,
         sort_keys=sketched.select("key", F.col("sig").alias("sort_key")),
         capped_metrics=obs,

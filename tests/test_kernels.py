@@ -259,6 +259,24 @@ def test_jaccard_identical_and_disjoint():
     assert oracle.jaccard_py(s1, s2) < 0.2
 
 
+def test_equal_slot_kernels_decide_like_jaccard_matrix():
+    """The in-task verifies (candidate_pairs' mid buckets, the band-state
+    scan) count equal slots with equal_slot_counts and compare against
+    equal_slot_need; that must be the decision jaccard_matrix(...) >= thr
+    makes, for every pair and every count."""
+    rng = np.random.default_rng(5)
+    rows = rng.integers(0, 3, (6, 16)).astype(np.uint32)
+    cols = rng.integers(0, 3, (4, 16)).astype(np.uint32)
+    eq = km.equal_slot_counts(rows, cols)
+    for i in range(len(rows)):
+        frac = km.jaccard_matrix(np.repeat(rows[i : i + 1], len(cols), axis=0), cols)
+        assert (eq[i] == np.rint(frac * 16)).all()
+    for p in (8, 10, 16, 100, 128):
+        for thr in np.round(np.arange(0.0, 1.0001, 0.005), 3):
+            need = km.equal_slot_need(float(thr), p)
+            assert [k / p >= thr for k in range(p + 1)] == [k >= need for k in range(p + 1)], (p, thr)
+
+
 def test_rho_densify_np_fuzz_vs_scalar():
     """Direct fuzz of the vectorized circular densify against the scalar
     oracle over random occupancy masks (incl. all-empty, all-full, single

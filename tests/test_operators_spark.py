@@ -140,21 +140,16 @@ def test_connected_components_vs_union_find(spark):
 def test_add_if_unique_driver_greedy_matches_loop(spark, corpus):
     """Round 6: the small-edge-set driver-side greedy must reproduce the
     distributed frontier loop bit-for-bit (same DAG recursion, different
-    evaluation engines)."""
+    evaluation engines), with the same schema on both branches."""
     from rensa_spark.operators.dedup import add_if_unique
 
     df = spark.createDataFrame(corpus[["image_id", "caption"]])
-    greedy = {
-        r["key"]: r["kept"]
-        for r in add_if_unique(df, CFG, "image_id", "caption").collect()
-    }
-    loop = {
-        r["key"]: r["kept"]
-        for r in add_if_unique(
-            df, CFG, "image_id", "caption", driver_max_edges=0
-        ).collect()
-    }
+    greedy_df = add_if_unique(df, CFG, "image_id", "caption")
+    loop_df = add_if_unique(df, CFG, "image_id", "caption", driver_max_edges=0)
+    greedy = {r["key"]: r["kept"] for r in greedy_df.collect()}
+    loop = {r["key"]: r["kept"] for r in loop_df.collect()}
     assert greedy == loop
+    assert greedy_df.schema == loop_df.schema
 
 
 def test_add_if_unique_matches_sequential_oracle(spark, corpus):
@@ -244,28 +239,29 @@ def test_capped_bucket_observation(spark):
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from rensa_spark.operators.lsh import (
-        candidate_pairs_from_band_rows,
-        explode_bands,
-    )
+    from rensa_spark.operators.lsh import candidate_pairs
 
-    rows = [(f"k{i:03d}", [7, 7]) for i in range(40)]  # one 40-member bucket x2 bands
-    df = spark.createDataFrame(rows, "key string, bands array<long>")
-    bands = explode_bands(df, "key")
+    # one 40-member bucket x2 bands; distinct signatures, so no pair verifies
+    rows = [(f"k{i:03d}", [i, i], [7, 7]) for i in range(40)]
+    df = spark.createDataFrame(rows, "key string, sig array<long>, bands array<long>")
+    # exact_task_cap at the hot cap sends the 40-member buckets past both
+    # caps, into the hub+ring regime
+    kw = dict(
+        sort_keys=df.select("key", F.col("sig").alias("sort_key")),
+        verify_threshold=0.8,
+        exact_task_cap=8,
+    )
 
     obs = Observation("capped")
-    pairs = candidate_pairs_from_band_rows(
-        bands, hot_bucket_cap=8, capped_metrics=obs
-    )
+    pairs = candidate_pairs(df, "key", hot_bucket_cap=8, capped_metrics=obs, **kw)
     n = pairs.count()
     assert n > 0
     assert obs.get["capped_buckets"] == 2
+    assert obs.get["heuristic_buckets"] == 2
     assert obs.get["max_bucket_size"] == 40
 
     obs2 = Observation("uncapped")
-    pairs2 = candidate_pairs_from_band_rows(
-        bands, hot_bucket_cap=4096, capped_metrics=obs2
-    )
+    pairs2 = candidate_pairs(df, "key", hot_bucket_cap=4096, capped_metrics=obs2, **kw)
     pairs2.count()
     assert obs2.get["capped_buckets"] == 0
     assert obs2.get["max_bucket_size"] == 40
